@@ -147,7 +147,7 @@ def test_crash_recovery_heals_tiers(spark, tmp_path):
     delta = store.read(spark, after=1, upto=2)
     clean = pipe._prepare(delta)
     clean.withColumn("day", F.to_date("ts")).write.mode("append").partitionBy(
-        "day", "bucket_id"
+        "day"
     ).parquet(pipe.turns_path)
     # tiers are now stale w.r.t. the turns store; checkpoint still at 1.
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import time
+
 import pandas as pd
 from pyspark.sql import functions as F
 
@@ -91,7 +93,20 @@ def test_stateful_conversation_tracker(spark, transcripts, transcripts_pdf, tmp_
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    # the processing-time timeout keeps this availableNow query alive
+    # with a no-data batch per trigger (see conversation_tracker), so
+    # stop it once every input row has been consumed
+    consumed: dict[int, int] = {}
+    deadline = time.monotonic() + 180
+    while q.isActive and sum(consumed.values()) < len(transcripts_pdf):
+        assert time.monotonic() < deadline, consumed
+        time.sleep(0.5)
+        consumed.update(
+            (p["batchId"], p["numInputRows"]) for p in q.recentProgress
+        )
+    q.stop()
+    assert q.exception() is None
+    assert sum(consumed.values()) == len(transcripts_pdf)
     out = spark.read.parquet(str(tmp_path / "sout")).toPandas()
     # the LAST update per conversation carries the full totals
     last = (

@@ -43,6 +43,15 @@ def shift(tab: pa.Table, col: str, off: int) -> pa.Table:
     return tab.set_column(i, col, arr.cast(tab.schema.field(col).type))
 
 
+def check_stride(tab: pa.Table, cols: list[str]) -> None:
+    """Replica ``rep`` shifts keys by ``rep * STRIDE``, so a key at or
+    above STRIDE would collide with the next replica's id space."""
+    for c in cols:
+        top = pa.compute.max(tab.column(c)).as_py()
+        if top is not None and top >= STRIDE:
+            raise ValueError(f"{c}: max key {top} >= STRIDE {STRIDE}")
+
+
 def main() -> None:
     src, dst, k = sys.argv[1], sys.argv[2], int(sys.argv[3])
     import os
@@ -61,6 +70,7 @@ def main() -> None:
     }
     for name, cols in plain_shifts.items():
         base = load(src, name)
+        check_stride(base, cols)
         reps = []
         for rep in range(k):
             t = base
@@ -71,6 +81,7 @@ def main() -> None:
         print(name, "->", k * base.num_rows, "rows", flush=True)
 
     base = load(src, "documents")
+    check_stride(base, ["doc_id"])
     reps = []
     for rep in range(k):
         t = shift(base, "doc_id", rep * STRIDE)
@@ -87,6 +98,7 @@ def main() -> None:
     print("documents ->", k * base.num_rows, "rows", flush=True)
 
     base = load(src, "embeddings")
+    check_stride(base, ["vec_id"])
     emb = np.vstack([np.asarray(x, dtype=np.float32)
                      for x in base.column("embedding").to_pylist()])
     reps = []

@@ -64,13 +64,15 @@ def salted_layout(
 
     ``sort_prefix``: extra leading sort columns (must already exist on
     ``df``, or be ``bucket_id``).  A caller that writes the frame
-    ``partitionBy(day, bucket_id)`` should pass ``("day", "bucket_id")``:
-    FileFormatWriter requires task rows ordered by the partition columns
-    and INSERTS ITS OWN FULL SORT when the child ordering doesn't
-    prefix-match — prefixing the layout sort makes that requirement a
-    satisfied prefix, cutting a second whole-data sort from the write
-    job.  File CONTENT is unchanged: day is constant within a written
-    file, so per-file row order is still ``(key, ts, order_col)``."""
+    ``partitionBy(*cols)`` must pass those columns here: the file writer
+    requires task rows ordered by the partition columns and, when the
+    child ordering doesn't start with them, plans its own sort on just
+    those columns — and the optimizer then DROPS the layout sort beneath
+    it as redundant, so files lose per-key contiguity and
+    ``(ts, order_col)`` order.  With the prefix the requirement is
+    already met and the layout sort is the plan's only sort.  The
+    partition columns are constant within a written file, so per-file
+    row order is still ``(key, ts, order_col)``."""
     if hot_ids is None:
         hot = hot_keys(df, key, hot_threshold).withColumn("_hot", F.lit(1))
         out = df.join(F.broadcast(hot), key, "left")

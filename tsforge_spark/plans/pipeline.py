@@ -7,9 +7,11 @@ Dataflow (full or incremental — same code path):
     → prepare: null-key drop, (conv_id, turn_idx) dedup (in-delta +
       against already-ingested turns for affected buckets), hash-bucket
       repartition + sortWithinPartitions(conv_id, ts, turn_idx)   [§4.2.2]
-    → canonical ordered turns store (partitioned by (day, bucket_id)) —
-      the per-turn text-equality invariant surface and the authoritative
-      source for tier rebuilds
+    → canonical ordered turns store (partitioned by day; bucket_id and
+      salt ride as data columns, each file holds every conversation as
+      one contiguous (ts, turn_idx)-ordered run) — the per-turn
+      text-equality invariant surface and the authoritative source for
+      tier rebuilds
     → 1m tier: RECOMPUTE the affected day partitions from the turns
       store (partition-pruned scan; dynamic partition overwrite ≈
       Iceberg MERGE INTO)
@@ -169,12 +171,54 @@ class RollupPipeline:
         os.replace(tmp, self._ckpt_path)
 
     def _read_if_exists(self, path: str) -> DataFrame | None:
-        if not os.path.exists(path):
-            return None
-        try:
-            return self.spark.read.parquet(path)
-        except Exception:
-            return None
+        """The parquet store at ``path``, or None when it holds no data
+        files Spark would list — names starting with ``_`` or ``.`` are
+        hidden from Spark, so the ``_temporary`` debris of a write killed
+        before its commit counts as no data.  Any other read failure (a
+        corrupt footer, conflicting partition directories) propagates:
+        treating an unreadable store as empty would silently skip dedup
+        against history."""
+        hidden = ("_", ".")
+        for _root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+            if any(
+                f.endswith(".parquet") and not f.startswith(hidden)
+                for f in files
+            ):
+                return self.spark.read.parquet(path)
+        return None
+
+    def _legacy_turns_days(self) -> list[str]:
+        """Day partitions of the turns store still in the old
+        ``day=/bucket_id=`` directory layout (one listing per day)."""
+        if not os.path.isdir(self.turns_path):
+            return []
+        return sorted(
+            sub
+            for sub in os.listdir(self.turns_path)
+            if sub.startswith("day=")
+            and any(
+                e.startswith("bucket_id=")
+                for e in os.listdir(os.path.join(self.turns_path, sub))
+            )
+        )
+
+    def _check_turns_layout(self) -> None:
+        """Refuse a turns store still in the old ``day=/bucket_id=``
+        layout: once a run appends day-level files beside ``bucket_id=``
+        directories, Spark can no longer list the store.
+        ``compact_turns()`` migrates it in place.  Also restores any day
+        partition whose swap a crash interrupted inside
+        ``compact_turns``."""
+        self._heal_interrupted_swaps(self.turns_path)
+        legacy = self._legacy_turns_days()
+        if legacy:
+            raise RuntimeError(
+                f"turns store {self.turns_path} uses the old "
+                f"day=/bucket_id= layout ({legacy[0]} holds bucket_id= "
+                "directories); run RollupPipeline.compact_turns() once to "
+                "migrate it to the day-only layout"
+            )
 
     # ---- stages ----
     def _day_filter(self, col_name: str, days):
@@ -207,11 +251,11 @@ class RollupPipeline:
           Hashing shrinks the probe shuffle to 8-byte keys; a hash
           collision can only cause a false *positive* verdict (an
           unnecessary dropDuplicates pass), never a wrong result.
-        - a fused (conv, day) aggregate — ONE delta scan feeds the
-          hot-key set, the per-bucket lineage counts, AND (when
-          ``need_days``) the affected-day set that run() previously paid
-          a separate scan for; the cached partial frame is ~n_convs
-          rows, so the derivations are trivial follow-up jobs.
+        - a fused per-bucket aggregate — ONE delta scan feeds the
+          hot-key set and the conv-prune id list; a concurrent day
+          probe supplies (when ``need_days``) the affected-day set.
+          Per-bucket lineage counts are not probed: they ride the turns
+          write itself (``_write_turns``).
 
         Affected days derive from the CLEAN (pre-dedup) delta: a row
         whose key columns are null never lands in any store, so its day
@@ -235,7 +279,7 @@ class RollupPipeline:
 
         def _hot_probe() -> tuple:
             # ONE action at the bucket grain carries everything bounded:
-            # per-bucket row sums, the hot-conversation ids riding along
+            # the hot-conversation ids riding along
             # as collect_list(when(count>thr)) — nulls are skipped, so
             # the list holds only hots, small by definition — the
             # per-bucket conv count (conv-prune gate), and, when pruning
@@ -252,7 +296,6 @@ class RollupPipeline:
                 F.count(F.lit(1)).alias("count")
             )
             agg_cols = [
-                F.sum("count").alias("rows"),
                 F.collect_list(
                     F.when(
                         F.col("count") > self.hot_threshold,
@@ -303,9 +346,9 @@ class RollupPipeline:
         # The probe scan is only worth paying when something consumes
         # its output: dup verification (probe mode), the affected-day
         # set (incremental runs), or the conv-prune id list.  A
-        # trust-mode FIRST run needs none of those — lineage counts come
-        # from the write's parquet footers, days from the partition
-        # dirs, and hot-conversation detection happens INLINE in
+        # trust-mode FIRST run needs none of those — lineage counts ride
+        # the store write, days come from the partition dirs, and
+        # hot-conversation detection happens INLINE in
         # salted_layout (hot_ids=None → a column-pruned self-aggregate +
         # broadcast left join inside the write job: no separate driver
         # round-trip, pipelined with the scan it already does).
@@ -374,14 +417,13 @@ class RollupPipeline:
 
         # text_len rides the store so tier rebuilds can column-prune the
         # text payload itself (the bulk of the store's bytes).
-        # NOTE on sort order vs the partitioned write: prefixing the
-        # layout sort with the write's partition columns (day,
-        # bucket_id) to satisfy FileFormatWriter's required ordering was
-        # A/B'd and is SLOWER here — the low-cardinality date prefix
-        # defeats the sorter's 8-byte prefix comparison (ties fall back
-        # to full row comparators), costing more than the write path's
-        # own partition-grouping pass saves.  Keep the high-cardinality
-        # (conv_id, ts, turn_idx) key.
+        # The store is written partitionBy("day"), so the layout sort
+        # leads with day: the writer's required ordering is then a
+        # satisfied prefix and the plan holds ONE sort, (day,
+        # xxhash64(conv_id), conv_id, ts, turn_idx).  Without the prefix
+        # the writer plans its own Sort [day] and the optimizer drops
+        # the layout sort beneath it, so files lose per-conversation
+        # contiguity and (ts, turn_idx) order.
         return salted_layout(
             clean.withColumn("text_len", F.length("text")).withColumn(
                 "day", F.to_date("ts")
@@ -392,10 +434,11 @@ class RollupPipeline:
             hot_threshold=self.hot_threshold,
             block_size=self.hot_block_size,
             hot_ids=hot_ids,
-            # day joins the exchange key (NOT the sort): ~days× more
-            # distinct partition values over the same partition count
-            # evens the write wave out — see salted_layout's note.
+            # day joins the exchange key: ~days× more distinct
+            # partition values over the same partition count evens the
+            # write wave out — see salted_layout's note.
             extra_partition_cols=("day",),
+            sort_prefix=("day",),
         )
 
     def _stage_dir(self, name: str) -> str:
@@ -424,41 +467,43 @@ class RollupPipeline:
         )
         _ = stage  # kept for call-site symmetry / future Iceberg MERGE
 
-    def _staging_footer_counts(self, staging: str) -> tuple[list, int]:
-        """Exact per-bucket row counts from the staged parquet footers —
-        driver-side metadata only, no Spark job (Iceberg: the commit's
-        manifest statistics).  Incremental deltas produce a handful of
-        files, so this is microseconds."""
-        import pyarrow.parquet as pq
+    def _write_turns(self, prepared: DataFrame, path: str) -> tuple[list, int]:
+        """Write the laid-out turns ``partitionBy("day")`` to ``path`` and
+        return ``(per-bucket row counts, total rows)`` for lineage.  The
+        counts ride the write job as an observation (Iceberg: the
+        commit's manifest statistics) — no readback job, no footer
+        walk."""
+        from pyspark.sql import Observation
 
-        per_bucket: dict[int, int] = {}
-        for root, _dirs, files in os.walk(staging):
-            b = None
-            for part in root.split(os.sep):
-                if part.startswith("bucket_id="):
-                    b = int(part.split("=", 1)[1])
-            if b is None:
-                continue
-            for f in files:
-                if f.endswith(".parquet"):
-                    n = pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                    per_bucket[b] = per_bucket.get(b, 0) + n
-        counts = sorted(per_bucket.items())
-        return counts, int(sum(c for _, c in counts))
+        obs = Observation()
+        prepared.observe(
+            obs,
+            *(
+                F.count_if(F.col("bucket_id") == b).alias(str(b))
+                for b in range(self.n_buckets)
+            ),
+        ).write.mode("overwrite").partitionBy("day").parquet(path)
+        got = obs.get
+        counts = [
+            (b, int(got[str(b)]))
+            for b in range(self.n_buckets)
+            if got[str(b)]
+        ]
+        return counts, sum(c for _, c in counts)
 
     def _move_staged_files(self, staging: str, target: str) -> int:
-        """Append staged day/bucket-partitioned files to ``target`` by
-        moving them (same filesystem → rename).  File names carry Spark's
+        """Append staged day-partitioned files to ``target`` by moving
+        them (same filesystem → rename).  File names carry Spark's
         per-job UUID, so collisions with existing store files cannot
         occur.  Returns the number of files moved."""
         moved = 0
-        for root, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(root, staging)
-            if "bucket_id=" not in rel:
+        for sub in os.listdir(staging):
+            if not sub.startswith("day="):
                 continue
-            dst_dir = os.path.join(target, rel)
+            root = os.path.join(staging, sub)
+            dst_dir = os.path.join(target, sub)
             os.makedirs(dst_dir, exist_ok=True)
-            for f in files:
+            for f in os.listdir(root):
                 if f.endswith(".parquet"):
                     os.replace(
                         os.path.join(root, f), os.path.join(dst_dir, f)
@@ -799,16 +844,16 @@ class RollupPipeline:
         job_id = new_job_id()
         metrics = MetricsLog(os.path.join(self.out, "metrics.jsonl"), job_id)
 
+        self._check_turns_layout()
         delta = self.store.read(self.spark, after=after, upto=last)
         first_run = after == 0 and not os.path.exists(self.turns_path)
-        # Affected event days: fused into _prepare's probe aggregate on
-        # incremental runs (one delta scan serves hot keys + lineage
-        # counts + days — the separate day scan was a whole extra job);
-        # on first runs they come free from the partition dirs the store
-        # write creates.  Days derive from the PRE-dedup delta, so a
-        # crash replay (turns already appended, tiers not yet rebuilt)
-        # still knows which day partitions to heal even though dedup
-        # reduces the delta to zero rows — the crash-safety anchor:
+        # Affected event days: _prepare's concurrent day probe on
+        # incremental runs; on first runs they come free from the
+        # partition dirs the store write creates.  Days derive from the
+        # PRE-dedup delta, so a crash replay (turns already appended,
+        # tiers not yet rebuilt) still knows which day partitions to
+        # heal even though dedup reduces the delta to zero rows — the
+        # crash-safety anchor:
         # every stage below is an idempotent recompute over these days.
 
         # Materialize the prepared delta to immutable staging files FIRST:
@@ -830,22 +875,23 @@ class RollupPipeline:
             # their tasks (a tier rebuilt from the store would read the
             # store back AFTER the write finished; on a first run the
             # store content IS the prepared delta, so deriving the tier
-            # from the same lineage is bit-identical).  Row counts and
-            # the affected-day set then come from the FILESYSTEM facts
-            # the write just created — partition dir names + parquet
-            # footers (Iceberg: the commit's manifest statistics).
+            # from the same lineage is bit-identical).  Row counts come
+            # from the write's own observation, the affected-day set
+            # from the partition dirs it created (Iceberg: the commit's
+            # manifest statistics).
             import datetime as _dt2
             import threading
 
             timings: dict[str, float] = {}
             errors: list[BaseException] = []
+            ingest: dict = {}
 
             def _t_write() -> None:
                 t0 = time.time()
                 try:
-                    prepared.write.mode("overwrite").partitionBy(
-                        "day", "bucket_id"
-                    ).parquet(self.turns_path)
+                    ingest["counts"] = self._write_turns(
+                        prepared, self.turns_path
+                    )
                 except BaseException as e:  # noqa: BLE001 — rethrown below
                     errors.append(e)
                 timings["write"] = time.time() - t0
@@ -913,24 +959,21 @@ class RollupPipeline:
             if errors:
                 raise errors[0]
             overlap_wall = time.time() - t_overlap0
-            counts, n_turns = self._staging_footer_counts(self.turns_path)
+            counts, n_turns = ingest["counts"]
             affected_days = sorted(
                 _dt2.date.fromisoformat(sub.split("=", 1)[1])
                 for sub in os.listdir(self.turns_path)
                 if sub.startswith("day=")
             )
         else:
-            # stage ALREADY day/bucket-partitioned: the append then
-            # becomes a driver-side file move (the plain-parquet stand-in
-            # for an Iceberg fast-append commit, which is exactly
-            # "add these data files to the table"), and the exact
-            # post-anti-join row counts come from the parquet FOOTERS —
-            # no readback aggregate job, no second write of the delta.
+            # stage ALREADY day-partitioned: the append then becomes a
+            # driver-side file move (the plain-parquet stand-in for an
+            # Iceberg fast-append commit, which is exactly "add these
+            # data files to the table"), and the exact post-anti-join
+            # row counts ride the staging write — no readback aggregate
+            # job, no second write of the delta.
             shutil.rmtree(ingest_staging, ignore_errors=True)
-            prepared.write.mode("overwrite").partitionBy(
-                "day", "bucket_id"
-            ).parquet(ingest_staging)
-            counts, n_turns = self._staging_footer_counts(ingest_staging)
+            counts, n_turns = self._write_turns(prepared, ingest_staging)
         if first_run:
             # overlapped stage accounting: prepare = the store write's
             # own duration, tier_1m = the rollup's own duration; their
@@ -953,8 +996,8 @@ class RollupPipeline:
 
         # canonical ordered turns store (append — rows are new by dedup;
         # on a first run the store write already happened above).  The
-        # staged files are already in final (day, bucket) layout and
-        # final sort order, so the append is a metadata-only file move.
+        # staged files are already in final day layout and final sort
+        # order, so the append is a metadata-only file move.
         # Crash mid-move leaves a subset appended — healed by the replay
         # contract (dedup-against-history drops the moved rows, the
         # affected-day recompute rebuilds the tiers), same convergence
@@ -964,9 +1007,9 @@ class RollupPipeline:
         mark("turns_store")
 
         if n_turns > 0:
-            # lineage at the hash-bucket grain — counts come from the
-            # staged parquet footers on every path (first runs read the
-            # final-layout staging, incremental runs the delta staging);
+            # lineage at the hash-bucket grain — counts are the ingest
+            # write's observation on every path (the store write on
+            # first runs, the delta staging write on incremental runs);
             # written driver-side: ≤ n_buckets tiny rows don't justify a
             # Spark job's fixed launch+commit cost
             append_lineage(
@@ -1240,14 +1283,17 @@ class RollupPipeline:
 
     def compact_turns(self, days: list | None = None) -> dict:
         """Compact the turns store: every incremental run APPENDS files
-        to its day/bucket partitions, so long-running stores accumulate
-        small files (read amplification on every rebuild).  Rewrites the
-        given days (default: all) through the canonical layout shuffle —
-        one output file per (day, bucket, salt) task, stable
-        (conv_id, ts, turn_idx) order restored across the merged files.
-        On Iceberg this is ``rewrite_data_files``; here it is a staged
-        read→rewrite of whole day partitions (safe: recompute contract).
-        Returns file counts before/after."""
+        to its day partitions, so long-running stores accumulate small
+        files (read amplification on every rebuild).  Rewrites the given
+        days (default: all) through the canonical layout shuffle into
+        staging — one file per (task, day), every conversation one
+        contiguous (ts, turn_idx)-ordered run — then swaps each staged
+        day partition in by rename (``_replace_partitions_by_move``).
+        This is also the migration for a store in the old
+        ``day=/bucket_id=`` layout: ``bucket_id`` is read back from the
+        directory names and rewritten as a data column, and such a
+        store is always rewritten whole.  On Iceberg this is
+        ``rewrite_data_files``.  Returns file counts before/after."""
         import datetime as _dt
 
         def _count_files() -> int:
@@ -1256,9 +1302,10 @@ class RollupPipeline:
                 n += sum(1 for f in files if f.endswith(".parquet"))
             return n
 
+        self._heal_interrupted_swaps(self.turns_path)
         before = _count_files()
         df = self.spark.read.parquet(self.turns_path)
-        if days:
+        if days and not self._legacy_turns_days():
             days = [
                 d.date() if hasattr(d, "date") else _dt.date.fromisoformat(str(d))
                 for d in days
@@ -1268,16 +1315,13 @@ class RollupPipeline:
         shutil.rmtree(staging, ignore_errors=True)
         (
             df.repartition("day", "bucket_id", "salt")
-            .sortWithinPartitions("conv_id", "ts", "turn_idx")
-            .write.mode("overwrite")
+            .sortWithinPartitions(
+                "day", F.xxhash64("conv_id"), "conv_id", "ts", "turn_idx"
+            )
+            .write.partitionBy("day")
             .parquet(staging)
         )
-        (
-            self.spark.read.parquet(staging)
-            .write.mode("overwrite")
-            .partitionBy("day", "bucket_id")
-            .parquet(self.turns_path)
-        )
+        self._replace_partitions_by_move(staging, self.turns_path)
         shutil.rmtree(staging, ignore_errors=True)
         after = _count_files()
         metrics = MetricsLog(os.path.join(self.out, "metrics.jsonl"), new_job_id())

@@ -91,7 +91,15 @@ def conversation_tracker(stream: DataFrame, timeout_ms: int = 30_000) -> DataFra
     ``timeout_ms`` is the processing-time quiet window after which a
     conversation's state is finalized and evicted; size it well above the
     micro-batch cadence or idle conversations finalize between batches
-    (observed with slow sandbox batches at the 30 s default)."""
+    (observed with slow local micro-batches at the 30 s default).
+
+    The processing-time timeout makes Spark run a no-data micro-batch on
+    every trigger (to fire timeouts), so a query over this frame never
+    finishes on its own, even with ``trigger(availableNow=True)``:
+    ``awaitTermination()`` waits out its full timeout and
+    ``processAllAvailable()`` blocks.  Poll ``query.recentProgress``
+    until the summed ``numInputRows`` covers the input, then
+    ``query.stop()``."""
     return stream.groupBy("conv_id").applyInPandasWithState(
         _make_track(timeout_ms),
         outputStructType=OUTPUT_SCHEMA,
