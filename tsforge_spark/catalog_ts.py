@@ -534,23 +534,6 @@ ORACLES_TS["stl_decompose"] = f"""
 QUERIES_TS["stl_decompose"] = q_stl_decompose
 
 
-def q_ts_battery(spark, sf_dir):
-    """Per-series UDF feature battery (SURVEY §2.9,
-    eda/ts_features_extension.py:26-195): spectral entropy, DFA, MI lag
-    concentration, seasonal strengths, forecastability.  Genuinely
-    non-SQL-expressible (FFT / DFA / histogram-MI kernels) — no DuckDB
-    oracle; numeric semantics are pinned by pandas-oracle pytest
-    (test_decompose) and the SQL-expressible half is oracle-checked by
-    ``ts_battery_sql`` below.  Kept out of ``queries()`` so every driver
-    row carries a full oracle."""
-    from tsforge_spark.operators.sessions import ts_features
-
-    y = _zero_filled_hourly(spark, sf_dir).withColumn(
-        "user_id", F.col("user_id").cast("string")
-    )
-    return ts_features(y, "user_id", "bucket", "c", freq=24)
-
-
 def q_ts_battery_sql(spark, sf_dir):
     """The SQL-expressible half of the ts-feature battery, EXACT vs a
     DuckDB twin: seasonal strengths at m ∈ {4, 13, 52} (MASE ratios —

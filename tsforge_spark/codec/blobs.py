@@ -13,27 +13,32 @@ no per-row Python.
 
 from __future__ import annotations
 
+import datetime as _dt
+import os as _os
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from tsforge_spark.codec.gorilla import encode_blobs_batch, assemble_blob, decode_blobs_many, decode_series, encode_timestamps
+from tsforge_spark.codec.gorilla import decode_blobs_many, encode_blobs_batch
 
 SEGMENT_TRUNC = {"1m": "day", "1h": "month", "1d": "month"}
 
 # decode-kernel sub-batch cap (bytes of blob payload per
-# decode_blobs_many call) — see decode_blobs.  Env-tunable so tests can
-# force the split path.  Read at decode() CALL time, not import time:
-# a module-level binding would freeze the value for driver-local
-# execution while fresh executor workers still re-read it —
-# asymmetric behavior for the advertised test hook.
-import os as _os
-
-
+# decode_blobs_many call) — see _decode_frames.  It also bounds a
+# driver-side read: read_series decodes on the driver only when the
+# pruned files' total bytes fit it.  Env-tunable so tests can force the
+# split path and the Spark branch of read_series.  Read at CALL time,
+# not import time: a module-level binding would freeze the value for
+# driver-local execution while fresh executor workers still re-read
+# it — asymmetric behavior for the advertised test hook.
 def _decode_chunk_bytes() -> int:
     return int(_os.environ.get("TSF_DECODE_CHUNK_BYTES", str(64 << 20)))
+
 
 BLOB_SCHEMA = T.StructType(
     [
@@ -48,12 +53,35 @@ BLOB_SCHEMA = T.StructType(
     ]
 )
 
+# the blob store as Spark lists it: the file columns, then the
+# ``tier_part=<t>/seg_day=<d>/`` partition columns.  Reads pass it
+# explicitly so Spark runs no schema-inference job per read.
+BLOB_READ_SCHEMA = T.StructType(
+    BLOB_SCHEMA.fields
+    + [
+        T.StructField("tier_part", T.StringType(), True),
+        T.StructField("seg_day", T.DateType(), True),
+    ]
+)
+
+# the blob columns a decode reads
+SERVE_COLS = ("conv_id", "measure", "blob")
+
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
         T.StructField("measure", T.StringType(), False),
         T.StructField("bucket", T.TimestampType(), False),
         T.StructField("value", T.DoubleType(), False),
+    ]
+)
+
+DECODED_ARROW_SCHEMA = pa.schema(
+    [
+        ("conv_id", pa.string()),
+        ("measure", pa.string()),
+        ("bucket", pa.timestamp("us", tz="UTC")),
+        ("value", pa.float64()),
     ]
 )
 
@@ -157,41 +185,120 @@ def read_series(
     measures: tuple[str, ...] | None = None,
 ) -> DataFrame:
     """Serving read path over the blob store: fetch decoded series for a
-    time range (and optionally a conversation set) touching only the
-    relevant partitions.
+    time range (and optionally a conversation / measure set) touching
+    only the relevant partitions.
+
+    ``t0``/``t1`` are inclusive instants; naive values are UTC (the
+    engine's UTC-µs contract, and what PySpark makes of a naive literal
+    on a UTC host), aware values are converted to UTC.  Returned
+    ``bucket`` values are the same instants under any session time zone.
 
     Pruning order, mirroring the store layout
     ``blobs/tier_part=<t>/seg_day=<d>/``:
-    1. ``tier_part`` + ``seg_day`` partition filters (directory-level —
-       a day query on the 1m tier reads one directory);
-    2. blob-row filters on ``conv_id`` / ``measure`` / ``segment``
-       (parquet row-group stats prune before payload bytes are read);
+    1. ``tier_part`` + ``seg_day`` partition pruning, on the driver by
+       listing the directories (a day query on the 1m tier lists one);
+    2. blob-row filters on ``conv_id`` / ``measure`` (parquet row-group
+       stats prune before payload bytes are read);
     3. decode only the surviving blobs, then the exact ``bucket`` range
        filter on the decoded points (a blob spans a whole segment, so
        edge segments decode fully — bounded by one segment per side).
+
+    Where the decode runs depends on the pruned files' total bytes:
+    when they fit the decode budget (``_decode_chunk_bytes()``) the
+    driver reads them with ``pyarrow.dataset``, decodes them and wraps
+    the points in a local DataFrame — no Spark job until the caller acts
+    on it, and then one.  Larger reads decode on the executors through
+    ``mapInPandas`` (one job).  Both run the same decode body and return
+    the same rows.
     """
-    import datetime as _dt
-
-    t0 = pd.Timestamp(t0).to_pydatetime()
-    t1 = pd.Timestamp(t1).to_pydatetime()
-    unit = SEGMENT_TRUNC[tier]
-
-    def trunc(d: _dt.datetime) -> _dt.date:
-        return d.date().replace(day=1) if unit == "month" else d.date()
-
-    df = spark.read.parquet(blobs_path).filter(
+    t0, t1 = _utc_instant(t0), _utc_instant(t1)
+    month = SEGMENT_TRUNC[tier] == "month"
+    lo, hi = (
+        t.date().replace(day=1) if month else t.date() for t in (t0, t1)
+    )
+    files = _pruned_files(blobs_path, tier, lo, hi)
+    if sum(size for _, size in files) <= _decode_chunk_bytes():
+        return _read_series_local(
+            spark, [f for f, _ in files], t0, t1, conv_ids, measures
+        )
+    df = spark.read.schema(BLOB_READ_SCHEMA).parquet(blobs_path).filter(
         (F.col("tier_part") == tier)
-        & (F.col("seg_day") >= trunc(t0))
-        & (F.col("seg_day") <= trunc(t1))
+        & (F.col("seg_day") >= lo)
+        & (F.col("seg_day") <= hi)
     )
     if conv_ids is not None:
         df = df.filter(F.col("conv_id").isin(list(conv_ids)))
     if measures is not None:
         df = df.filter(F.col("measure").isin(list(measures)))
-    decoded = decode_blobs(df)
-    return decoded.filter(
+    return decode_blobs(df).filter(
         (F.col("bucket") >= F.lit(t0)) & (F.col("bucket") <= F.lit(t1))
     )
+
+
+def _utc_instant(t) -> _dt.datetime:
+    """``t`` as an aware UTC datetime; naive input is taken as UTC."""
+    ts = pd.Timestamp(t)
+    ts = ts.tz_localize("UTC") if ts.tz is None else ts.tz_convert("UTC")
+    return ts.to_pydatetime()
+
+
+def _pruned_files(
+    blobs_path: str, tier: str, lo: _dt.date, hi: _dt.date
+) -> list[tuple[str, int]]:
+    """``(path, bytes)`` of the parquet files in the ``seg_day`` partitions
+    of ``tier`` within ``[lo, hi]``.  Names starting with ``_`` or ``.``
+    (``.crc`` files, ``_temporary`` and ``.trash_*`` swap directories)
+    are skipped, as Spark's listing skips them."""
+    if not _os.path.isdir(blobs_path):
+        raise FileNotFoundError(f"blob store {blobs_path} does not exist")
+    tier_dir = _os.path.join(blobs_path, f"tier_part={tier}")
+    if not _os.path.isdir(tier_dir):
+        return []
+    out = []
+    for part in sorted(_os.scandir(tier_dir), key=lambda e: e.name):
+        if not (part.is_dir() and part.name.startswith("seg_day=")):
+            continue
+        if not lo <= _dt.date.fromisoformat(part.name[len("seg_day="):]) <= hi:
+            continue
+        for f in sorted(_os.scandir(part.path), key=lambda e: e.name):
+            if (
+                f.is_file()
+                and f.name.endswith(".parquet")
+                and not f.name.startswith(("_", "."))
+            ):
+                out.append((f.path, f.stat().st_size))
+    return out
+
+
+def _read_series_local(
+    spark, files: list[str], t0, t1, conv_ids, measures
+) -> DataFrame:
+    """The driver-side branch of ``read_series``: read and decode
+    ``files`` here and return the points as a local DataFrame."""
+    tables = []
+    if files:
+        flt = None
+        for col, keep in (("conv_id", conv_ids), ("measure", measures)):
+            if keep is not None:
+                cond = ds.field(col).isin(list(keep))
+                flt = cond if flt is None else flt & cond
+        blobs = (
+            ds.dataset(files, format="parquet")
+            .to_table(columns=list(SERVE_COLS), filter=flt)
+            .to_pandas()
+        )
+        for pdf in _decode_frames([blobs]):
+            pdf = pdf[(pdf["bucket"] >= t0) & (pdf["bucket"] <= t1)]
+            tables.append(
+                pa.Table.from_pandas(
+                    pdf, schema=DECODED_ARROW_SCHEMA, preserve_index=False
+                )
+            )
+    table = (
+        pa.concat_tables(tables) if tables
+        else DECODED_ARROW_SCHEMA.empty_table()
+    )
+    return spark.createDataFrame(table, schema=DECODED_SCHEMA)
 
 
 def _split_by_bytes(pdf: pd.DataFrame, cap: int):
@@ -214,46 +321,51 @@ def _split_by_bytes(pdf: pd.DataFrame, cap: int):
         prev = c
 
 
+def _decode_frames(frames):
+    """Blob frames (``conv_id``, ``measure``, ``blob``) → decoded point
+    frames.  The decode body of both ``read_series`` branches and of
+    ``decode_blobs``.
+
+    Bounds peak kernel memory per sub-batch: the vectorized decoder
+    concatenates every blob in its input into one buffer, so a 64k-row
+    Arrow batch of DENSE blobs (1m day segments, ~10KB each) would join
+    ~700MB before decoding.  Split on cumulative blob bytes; coarse-tier
+    batches (~20B/blob) pass through as one chunk."""
+    cap = _decode_chunk_bytes()
+    for full in frames:
+        if len(full) == 0:
+            continue
+        yield from (_decode_one(pdf) for pdf in _split_by_bytes(full, cap))
+
+
+def _decode_one(pdf: pd.DataFrame) -> pd.DataFrame:
+    # Whole-chunk vectorized decode (codec/gorilla.py
+    # decode_blobs_many): headers parse as one structured-dtype
+    # view, chains resolve as segmented scans — no per-blob Python.
+    # A per-blob decode_series loop here paid ~6µs fixed cost per
+    # blob, which at ~1 point/blob on the 1h/1d stores capped
+    # serving at 168k points/s.
+    ts, vals, lens = decode_blobs_many(list(pdf["blob"]))
+    # id columns go out dictionary-encoded: repeating int32 codes +
+    # one small category table beats materializing sum(n)
+    # Python-string refs and re-encoding them to Arrow (the string
+    # repeat was ~half the task-side cost at ~1 point/blob; Arrow
+    # passes the dictionary through and Spark reads it as a plain
+    # string column).  Buckets go out tz-aware UTC: Spark would take
+    # naive values as session-local wall times and shift them by the
+    # session zone's offset.
+    return pd.DataFrame(
+        {
+            "conv_id": pd.Categorical(pdf["conv_id"]).repeat(lens),
+            "measure": pd.Categorical(pdf["measure"]).repeat(lens),
+            "bucket": pd.Series(ts.astype("datetime64[us]")).dt.tz_localize("UTC"),
+            "value": vals,
+        }
+    )
+
+
 def decode_blobs(blob_df: DataFrame) -> DataFrame:
     """Blob table → long decoded series (for verification / serving)."""
-
-    def decode(iterator):
-        # Bound peak kernel memory per sub-batch: the vectorized decoder
-        # concatenates every blob in its input into one buffer, so a
-        # 64k-row Arrow batch of DENSE blobs (1m day segments, ~10KB
-        # each) would join ~700MB before decoding.  Split on cumulative
-        # blob bytes; coarse-tier batches (~20B/blob) pass through as
-        # one chunk.
-        cap = _decode_chunk_bytes()
-        for full in iterator:
-            if len(full) == 0:
-                continue
-            yield from (
-                _decode_one(pdf)
-                for pdf in _split_by_bytes(full, cap)
-            )
-
-    def _decode_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Whole-chunk vectorized decode (codec/gorilla.py
-        # decode_blobs_many): headers parse as one structured-dtype
-        # view, chains resolve as segmented scans — no per-blob Python.
-        # A per-blob decode_series loop here paid ~6µs fixed cost per
-        # blob, which at ~1 point/blob on the 1h/1d stores capped
-        # serving at 168k points/s.
-        ts, vals, lens = decode_blobs_many(list(pdf["blob"]))
-        # id columns go out dictionary-encoded: repeating int32 codes +
-        # one small category table beats materializing sum(n)
-        # Python-string refs and re-encoding them to Arrow (the string
-        # repeat was ~half the task-side cost at ~1 point/blob; Arrow
-        # passes the dictionary through and Spark reads it as a plain
-        # string column)
-        return pd.DataFrame(
-            {
-                "conv_id": pd.Categorical(pdf["conv_id"]).repeat(lens),
-                "measure": pd.Categorical(pdf["measure"]).repeat(lens),
-                "bucket": ts.astype("datetime64[us]"),
-                "value": vals,
-            }
-        )
-
-    return blob_df.mapInPandas(decode, schema=DECODED_SCHEMA)
+    return blob_df.select(*SERVE_COLS).mapInPandas(
+        _decode_frames, schema=DECODED_SCHEMA
+    )

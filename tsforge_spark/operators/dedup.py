@@ -392,24 +392,3 @@ def neardup_clusters(
             break
     edges.unpersist()
     return labels.withColumnRenamed("label", "cluster_id")
-
-
-def embedding_neardup_pairs(
-    emb: DataFrame, id_col: str, vec_col: str, label_col: str, threshold: float = 0.95
-) -> DataFrame:
-    """Embedding-cosine near-dup within candidate blocks (same label =
-    the blocking key; at scale the block key comes from LSH/IVF
-    assignment, see similarity.py)."""
-    from tsforge_spark.operators.similarity import cosine
-
-    a = emb.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col(label_col).alias("blk")
-    )
-    b = emb.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col(label_col).alias("blk")
-    )
-    pairs = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
-    sim = cosine(F.col("va"), F.col("vb"))
-    return pairs.select("id_a", "id_b", sim.alias("cosine")).filter(
-        F.col("cosine") > threshold
-    )

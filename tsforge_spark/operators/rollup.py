@@ -136,13 +136,6 @@ def aggregate_by_group(
     return df.groupBy(group_col, time_col).agg(fn(value_col).alias(value_col))
 
 
-def apply_retention(tier_df: DataFrame, cutoff) -> DataFrame:
-    """Retention: drop tier cells older than ``cutoff``.  On a
-    partitioned table this is metadata-only partition pruning; expressed
-    here as a filter so Catalyst pushes it to the scan."""
-    return tier_df.filter(F.col("bucket") >= F.lit(cutoff))
-
-
 def fold_tiers_multi(finer: DataFrame, to_tiers: tuple[str, ...] = ("1h", "1d")) -> DataFrame:
     """Fold a finer tier into SEVERAL coarser tiers in ONE aggregation
     via GROUPING SETS — a single shuffle (Expand duplicates each input

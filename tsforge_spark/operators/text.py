@@ -97,13 +97,6 @@ def add_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("pred_lang", F.coalesce(best, F.lit("und")))
 
 
-def md5_int(c: Column, salt: str = "") -> Column:
-    """First 8 hex digits of md5 → bigint (engine-portable hash)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), c)), 1, 8), 16, 10
-    ).cast("long")
-
-
 def add_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Content fingerprint: sum of md5-token hashes mod 2^31−1 —
     order-insensitive token-bag hash (rolling-hash-family document

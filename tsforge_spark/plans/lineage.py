@@ -17,20 +17,10 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def new_job_id() -> str:
     return uuid.uuid4().hex[:12]
-
-
-def bucket_counts(df: DataFrame, n_buckets: int, key: str = "conv_id") -> DataFrame:
-    """Row counts per hash bucket — the per-partition lineage grain."""
-    return (
-        df.withColumn("bucket_id", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int"))
-        .groupBy("bucket_id")
-        .agg(F.count(F.lit(1)).alias("row_count"))
-    )
 
 
 def lineage_rows(

@@ -50,7 +50,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tsforge_spark.codec.blobs import SEGMENT_TRUNC, decode_blobs, encode_tier_blobs
+from tsforge_spark.codec.blobs import (
+    BLOB_READ_SCHEMA, SEGMENT_TRUNC, decode_blobs, encode_tier_blobs,
+)
 from tsforge_spark.operators.rollup import fold_tier, rollup_transcripts
 from tsforge_spark.plans.lineage import MetricsLog, append_lineage, new_job_id
 from tsforge_spark.sources.snapshots import SnapshotStore
@@ -1343,7 +1345,7 @@ class RollupPipeline:
                     self._heal_interrupted_swaps(
                         os.path.join(self.blobs_path, sub)
                     )
-        df = self.spark.read.parquet(self.blobs_path)
+        df = self.spark.read.schema(BLOB_READ_SCHEMA).parquet(self.blobs_path)
         return df.filter(F.col("tier") == tier) if tier else df
 
     def decoded_series(self, tier: str) -> DataFrame:
