@@ -96,19 +96,3 @@ def test_summarize_by_time_names_and_values(spark, transcripts, transcripts_pdf)
     assert (got["chars_sum"].to_numpy() == want["sum"].to_numpy()).all()
     assert abs(got["chars_mean"].to_numpy() - want["mean"].to_numpy()).max() < 1e-9
 
-
-def test_fold_tiers_multi_equals_chained_folds(spark, transcripts):
-    """The GROUPING SETS single-job fold must equal the chained
-    fold_tier path per tier (the 'tested single-job alternative' the
-    pipeline comment promises)."""
-    from tsforge_spark.operators.rollup import fold_tiers_multi
-
-    t1m = rollup_transcripts(transcripts, "1m")
-    multi = fold_tiers_multi(t1m, ("1h", "1d")).toPandas()
-    t1h = fold_tier(t1m, "1h")
-    for tier, chained_df in (("1h", t1h), ("1d", fold_tier(t1h, "1d"))):
-        got = normalize(
-            multi[multi["tier_part"] == tier].drop(columns=["tier_part"])
-        )
-        want = normalize(chained_df.toPandas())
-        pd.testing.assert_frame_equal(got, want)

@@ -1,4 +1,4 @@
-"""Tier table ⇄ Gorilla blob table, via ``applyInPandas``.
+"""Tier table ⇄ Gorilla blob table.
 
 One blob per ``(conv_id, segment, measure)`` where ``segment`` truncates
 the bucket to a chunk window (day for the 1m tier, month for 1h/1d).
@@ -93,12 +93,64 @@ def _default_n_buckets(parallelism: int, cells_hint: int | None) -> int:
     ~2M cells per group.  A bucket's group loads WHOLE into one pandas
     frame, and cells/bucket grows with data at fixed parallelism, so
     without the cap a full-history rebuild at 100× data OOMs the
-    executors instead of just adding waves.  The pipeline passes its
-    footer-derived turn count (tier cells ≤ turns) on first runs."""
+    executors instead of just adding waves.  The pipeline passes each
+    tier slice's cell count, read from the tier's parquet footers."""
     n = max(parallelism * 4, 16)
     if cells_hint is not None:
         n = max(n, int(cells_hint) // 2_000_000)
     return n
+
+
+def encodes_on_driver(spark, cells_hint: int | None) -> bool:
+    """Whether ``encode_tier_blobs`` encodes a slice of at most
+    ``cells_hint`` cells on the driver: only a bounded slice small
+    enough to cross the Python boundary as ONE Arrow batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``) does."""
+    if cells_hint is None:
+        return False
+    batch = int(
+        spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    )
+    return 0 < batch and int(cells_hint) <= batch
+
+
+_BLOB_COLS = [f.name for f in BLOB_SCHEMA]
+
+
+def _encode_frame(
+    pdf: pd.DataFrame, tier: str, measures: tuple[str, ...]
+) -> pd.DataFrame:
+    """Tier cells (``conv_id``, ``bucket``, ``segment``, ``<measures>``)
+    → blob rows.  The encode body of both ``encode_tier_blobs``
+    branches."""
+    if len(pdf) == 0:
+        return pd.DataFrame(columns=_BLOB_COLS)
+    pdf = pdf.sort_values(["conv_id", "segment", "bucket"], kind="mergesort")
+    ts_all = pdf["bucket"].to_numpy("datetime64[us]").astype(np.int64)
+    seg_all = pdf["segment"].to_numpy("datetime64[us]").astype(np.int64)
+    conv_all = pdf["conv_id"].to_numpy()
+    # boundary detection: new blob where conv or segment changes
+    change = np.empty(len(pdf), dtype=bool)
+    change[0] = True
+    change[1:] = (conv_all[1:] != conv_all[:-1]) | (seg_all[1:] != seg_all[:-1])
+    starts = np.flatnonzero(change)
+    ends = np.append(starts[1:], len(pdf))
+    vals_by_m = {m: pdf[m].to_numpy(dtype=np.float64) for m in measures}
+    # ONE vectorized pass encodes every chunk in the batch (timestamp
+    # streams shared across measures); per-blob work is just a header
+    # pack + slices — tier cells at coarse grains average a handful of
+    # points per segment, so per-chunk numpy calls would dominate
+    blob_lists = encode_blobs_batch(ts_all, starts, ends, vals_by_m)
+    n_pts = (ends - starts).astype(np.int64)
+    conv_b = conv_all[starts]
+    seg_b = pdf["segment"].iloc[starts].to_numpy()
+    rows = []
+    for j in range(len(starts)):
+        n = int(n_pts[j])
+        for m in measures:
+            blob = blob_lists[m][j]
+            rows.append((conv_b[j], seg_b[j], tier, m, n, n * 16, len(blob), blob))
+    return pd.DataFrame(rows, columns=_BLOB_COLS)
 
 
 def encode_tier_blobs(
@@ -110,68 +162,53 @@ def encode_tier_blobs(
 ) -> DataFrame:
     """Encode tier cells into per-(conv, segment, measure) blobs.
 
-    Packed kernel: grouping by (conv, segment) directly would create one
-    Arrow batch per blob — millions of tiny groups whose per-group
-    overhead dwarfs the encode.  Instead we group by a hash bucket
-    (~``n_buckets`` large groups), sort inside the kernel, and split on
-    (conv, segment) boundaries with numpy — the inner loop runs once per
-    *blob*, never per row, and each encode_series call is vectorized.
-    Bucketing also bounds task skew: a hot conversation's segments spread
-    across its bucket's single sort, not a straggler group.
+    ``cells_hint`` is an upper bound on the number of rows (cells) in
+    ``tier_df``; ``None`` means unknown.  It picks the branch, and both
+    run the same encode body (``_encode_frame``) and return the same
+    rows, byte for byte:
+
+    - **Driver**, when the hint is at most the session's
+      ``spark.sql.execution.arrow.maxRecordsPerBatch`` (a slice that
+      would cross the Python boundary as one Arrow batch anyway): the
+      projected cells are collected with ``toPandas()`` (one JVM-only
+      job, the same session time-zone conversion ``applyInPandas``
+      applies), encoded here, and returned as a local DataFrame in one
+      partition, so a partitioned write lays out one file per partition.
+      The kernel encodes a batch in milliseconds; the executor round
+      trip this skips costs most of a second per slice.
+    - **Spark**, otherwise: ``groupBy(_enc_bucket).applyInPandas``.
+      Grouping by (conv, segment) directly would create one Arrow batch
+      per blob — millions of tiny groups whose per-group overhead
+      dwarfs the encode — so rows group by a hash bucket (~``n_buckets``
+      large groups; the hint also caps cells per group, see
+      ``_default_n_buckets``), sort inside the kernel and split on
+      (conv, segment) boundaries with numpy: the inner loop runs once
+      per *blob*, never per row.  Bucketing also bounds task skew: a hot
+      conversation's segments spread across its bucket's single sort,
+      not a straggler group.  This is the branch that scales.
     """
+    spark = tier_df.sparkSession
+    segment = F.date_trunc(SEGMENT_TRUNC[tier], F.col("bucket")).alias("segment")
+    if encodes_on_driver(spark, cells_hint):
+        pdf = tier_df.select("conv_id", "bucket", *measures, segment).toPandas()
+        out = _encode_frame(pdf, tier, measures)
+        return spark.createDataFrame(out, BLOB_SCHEMA).coalesce(1)
 
     if n_buckets is None:
-        sc = tier_df.sparkSession.sparkContext
-        n_buckets = _default_n_buckets(sc.defaultParallelism, cells_hint)
-
-    cols = [
-        "conv_id", "segment", "tier", "measure",
-        "n_points", "raw_bytes", "blob_bytes", "blob",
-    ]
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame(columns=cols)
-        pdf = pdf.sort_values(["conv_id", "segment", "bucket"], kind="mergesort")
-        ts_all = pdf["bucket"].to_numpy("datetime64[us]").astype(np.int64)
-        seg_all = pdf["segment"].to_numpy("datetime64[us]").astype(np.int64)
-        conv_all = pdf["conv_id"].to_numpy()
-        # boundary detection: new blob where conv or segment changes
-        change = np.empty(len(pdf), dtype=bool)
-        change[0] = True
-        change[1:] = (conv_all[1:] != conv_all[:-1]) | (seg_all[1:] != seg_all[:-1])
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        vals_by_m = {m: pdf[m].to_numpy(dtype=np.float64) for m in measures}
-        # ONE vectorized pass encodes every chunk in the batch (timestamp
-        # streams shared across measures); per-blob work is just a header
-        # pack + slices — tier cells at coarse grains average a handful of
-        # points per segment, so per-chunk numpy calls would dominate
-        blob_lists = encode_blobs_batch(ts_all, starts, ends, vals_by_m)
-        n_pts = (ends - starts).astype(np.int64)
-        conv_b = conv_all[starts]
-        seg_b = pdf["segment"].iloc[starts].to_numpy()
-        rows = []
-        for j in range(len(starts)):
-            n = int(n_pts[j])
-            for m in measures:
-                blob = blob_lists[m][j]
-                rows.append(
-                    (conv_b[j], seg_b[j], tier, m, n, n * 16, len(blob), blob)
-                )
-        return pd.DataFrame(rows, columns=cols)
-
+        n_buckets = _default_n_buckets(
+            spark.sparkContext.defaultParallelism, cells_hint
+        )
     with_seg = tier_df.select(
         "conv_id",
         "bucket",
         *measures,
-        F.date_trunc(SEGMENT_TRUNC[tier], F.col("bucket")).alias("segment"),
+        segment,
         F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
         .cast("int")
         .alias("_enc_bucket"),
     )  # narrow projection: only these columns cross the Arrow boundary
     return with_seg.groupBy("_enc_bucket").applyInPandas(
-        encode, schema=BLOB_SCHEMA
+        lambda pdf: _encode_frame(pdf, tier, measures), schema=BLOB_SCHEMA
     )
 
 

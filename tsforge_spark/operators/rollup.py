@@ -135,45 +135,3 @@ def aggregate_by_group(
     fn = {"sum": F.sum, "mean": F.avg, "min": F.min, "max": F.max}[agg]
     return df.groupBy(group_col, time_col).agg(fn(value_col).alias(value_col))
 
-
-def fold_tiers_multi(finer: DataFrame, to_tiers: tuple[str, ...] = ("1h", "1d")) -> DataFrame:
-    """Fold a finer tier into SEVERAL coarser tiers in ONE aggregation
-    via GROUPING SETS — a single shuffle (Expand duplicates each input
-    row once per target tier, map-side partials combine as usual)
-    instead of one chained fold job per tier.  Exact: every partial is
-    associative, so 1d-from-1m equals 1d-from-1h bit for bit.
-
-    Returns the union of tier tables tagged with ``tier_part`` (bucket
-    coalesced from the per-tier truncations)."""
-    bcols = [bucket_expr("bucket", t).alias(f"_b_{t}") for t in to_tiers]
-    src = finer.select("*", *bcols)
-    aggs = [F.sum(c).alias(c) for c in _SUM_COLS]
-    aggs += [
-        F.min("chars_min").alias("chars_min"),
-        F.max("chars_max").alias("chars_max"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-    ]
-    names = [f"_b_{t}" for t in to_tiers]
-    gd = src.groupingSets(
-        [["conv_id", n] for n in names], "conv_id", *names
-    )
-    # grouping(col) == 0 → col is IN this grouping set → this row
-    # belongs to that tier (grouping() is only legal inside the agg)
-    out = gd.agg(
-        *aggs, *[F.grouping(n).alias(f"_g{n}") for n in names]
-    )
-    tier_part = None
-    for t in to_tiers:
-        cond = F.col(f"_g_b_{t}") == 0
-        tier_part = (
-            F.when(cond, F.lit(t)) if tier_part is None
-            else tier_part.when(cond, F.lit(t))
-        )
-    return out.select(
-        "conv_id",
-        F.coalesce(*[F.col(n) for n in names]).alias("bucket"),
-        *_SUM_COLS,
-        "chars_min", "chars_max", "first_ts", "last_ts",
-        tier_part.alias("tier_part"),
-    )

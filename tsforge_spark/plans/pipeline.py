@@ -42,6 +42,7 @@ codec/blobs.py).
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import shutil
@@ -52,12 +53,22 @@ from pyspark.sql import functions as F
 
 from tsforge_spark.codec.blobs import (
     BLOB_READ_SCHEMA, SEGMENT_TRUNC, decode_blobs, encode_tier_blobs,
+    encodes_on_driver,
 )
 from tsforge_spark.operators.rollup import fold_tier, rollup_transcripts
 from tsforge_spark.plans.lineage import MetricsLog, append_lineage, new_job_id
+from tsforge_spark.schema import TIER_READ_SCHEMA, TURNS_READ_SCHEMA
 from tsforge_spark.sources.snapshots import SnapshotStore
 
 TIERS = ["1m", "1h", "1d"]
+
+
+def _segment_start(d: _dt.date, unit: str) -> _dt.datetime:
+    """The start of the ``unit`` (day / month) segment holding day ``d``:
+    the Python twin of Spark's ``date_trunc`` on a UTC date."""
+    if unit == "month":
+        d = d.replace(day=1)
+    return _dt.datetime(d.year, d.month, d.day)
 
 
 class RollupPipeline:
@@ -172,8 +183,30 @@ class RollupPipeline:
             json.dump(ckpt, f, indent=1)
         os.replace(tmp, self._ckpt_path)
 
+    def _require_utc_session(self) -> None:
+        """Refuse a non-UTC session.  The engine's contract is UTC µs
+        (``session.ENGINE_CONFS``): the stores hold naive timestamps,
+        which Spark reads as session-local wall times, so under another
+        zone segment filters match nothing and encoded buckets shift."""
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        if tz != "UTC":
+            raise ValueError(
+                f"spark.sql.session.timeZone is {tz!r}; RollupPipeline "
+                "needs a UTC session (set spark.sql.session.timeZone=UTC)"
+            )
+
+    def _read_tier(self, tier: str) -> DataFrame:
+        return self.spark.read.schema(TIER_READ_SCHEMA).parquet(
+            self.tier_path(tier)
+        )
+
+    def _read_turns(self, path: str | None = None) -> DataFrame:
+        return self.spark.read.schema(TURNS_READ_SCHEMA).parquet(
+            path or self.turns_path
+        )
+
     def _read_if_exists(self, path: str) -> DataFrame | None:
-        """The parquet store at ``path``, or None when it holds no data
+        """The turns store at ``path``, or None when it holds no data
         files Spark would list — names starting with ``_`` or ``.`` are
         hidden from Spark, so the ``_temporary`` debris of a write killed
         before its commit counts as no data.  Any other read failure (a
@@ -187,7 +220,7 @@ class RollupPipeline:
                 f.endswith(".parquet") and not f.startswith(hidden)
                 for f in files
             ):
-                return self.spark.read.parquet(path)
+                return self._read_turns(path)
         return None
 
     def _legacy_turns_days(self) -> list[str]:
@@ -607,6 +640,55 @@ class RollupPipeline:
                     time.sleep(0.05 * (attempt + 1))
             shutil.rmtree(trash, ignore_errors=True)
 
+    def _day_cells(self, tier: str, segments) -> dict:
+        """``{day: cells}`` for the ``day=`` partitions of ``tier`` that
+        hold cells of the segments starting at ``segments`` (for a month
+        segment, every day of the month), counted from the parquet
+        footers — driver-side metadata only, no Spark job (Iceberg:
+        manifest stats)."""
+        import pyarrow.parquet as pq
+
+        unit, want = SEGMENT_TRUNC[tier], set(segments)
+        root = self.tier_path(tier)
+        out = {}
+        for sub in sorted(os.listdir(root)):
+            if not sub.startswith("day="):
+                continue
+            day = _dt.date.fromisoformat(sub[len("day="):])
+            if _segment_start(day, unit) not in want:
+                continue
+            part = os.path.join(root, sub)
+            out[day] = sum(
+                pq.ParquetFile(os.path.join(part, f)).metadata.num_rows
+                for f in os.listdir(part)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+        return out
+
+    def _encode_segments(
+        self, tier: str, day_cells: dict, conv_ids=None
+    ) -> tuple[DataFrame, str]:
+        """Blob rows, with their store partition columns, of the
+        ``tier`` cells in the day partitions of ``day_cells`` (whole
+        segments, as ``_day_cells`` lists them; optionally only
+        ``conv_ids``' cells), and the encode branch taken.  The footer
+        count bounds the slice, so one that fits an Arrow batch encodes
+        on the driver (``encode_tier_blobs``)."""
+        cells = self._day_filter("day", sorted(day_cells))(self._read_tier(tier))
+        if conv_ids is not None:
+            cells = cells.filter(F.col("conv_id").isin(conv_ids))
+        hint = sum(day_cells.values())
+        blobs = encode_tier_blobs(
+            cells.drop("day"), tier, self.measures, cells_hint=hint
+        )
+        branch = "driver" if encodes_on_driver(self.spark, hint) else "spark"
+        return (
+            blobs.withColumn("seg_day", F.to_date("segment")).withColumn(
+                "tier_part", F.lit(tier)
+            ),
+            branch,
+        )
+
     def _encode_and_commit_blobs(
         self,
         tiers: list,
@@ -614,17 +696,21 @@ class RollupPipeline:
         affected_days,
         prune_convs: bool,
         delta_convs,
-        cells_hint: int | None = None,
+        branches: dict,
     ) -> int:
         """Re-encode the affected (tier, segment) blob chunks for a
         GROUP of tiers and commit them (stage → atomic per-partition
-        move).  Returns bytes written this call.
+        move).  Returns bytes written this call and records each tier's
+        encode branch in ``branches``.
 
         All tiers in the group union into ONE write job (fewer
         fixed-cost job launches; blobs derive from tier tables, so no
-        extra staging materialization is needed).  Bytes written ride
-        the write job as an observation metric (one cheap sum —
-        Iceberg: commit manifest statistics); a readback scan, even
+        extra staging materialization is needed).  Each tier's slice is
+        bounded by the footer cell count of the day partitions it can
+        touch, which picks the encode branch (``encode_tier_blobs``): a
+        slice that fits one Arrow batch encodes on the driver.  Bytes
+        written ride the write job as an observation metric (one cheap
+        sum — Iceberg: commit manifest statistics); a readback scan, even
         partition-pruned, would be a whole extra job.  Staging + atomic
         per-partition moves (not a direct dynamic overwrite): the
         conv-pruned path READS the blob store it replaces, so the swap
@@ -640,39 +726,17 @@ class RollupPipeline:
         read (no decode, no re-encode) — a month chunk at 1h/1d grain
         otherwise re-encodes every conversation in the store for a 2%
         delta."""
-        import datetime as _dt
-
         from pyspark.sql import Observation
-
-        def _py_trunc(d: _dt.date, unit: str) -> _dt.datetime:
-            # Python twin of Spark date_trunc on a date (no Spark jobs
-            # for what is a handful of driver-side dates)
-            if unit == "month":
-                d = d.replace(day=1)
-            elif unit == "week":
-                d = d - _dt.timedelta(days=d.weekday())
-            return _dt.datetime(d.year, d.month, d.day)
 
         all_blobs = None
         for tier in tiers:
             seg_unit = SEGMENT_TRUNC[tier]
-            tier_df = self.spark.read.parquet(self.tier_path(tier))
             seg_of_day = sorted(
-                {_py_trunc(d, seg_unit) for d in affected_days}
+                {_segment_start(d, seg_unit) for d in affected_days}
             )
-            affected = tier_df.filter(
-                F.date_trunc(seg_unit, F.col("bucket")).isin(seg_of_day)
-            )
-            if prune_convs:
-                affected = affected.filter(
-                    F.col("conv_id").isin(delta_convs)
-                )
-            blobs = encode_tier_blobs(
-                affected.drop("day"), tier, self.measures,
-                cells_hint=cells_hint,
-            )
-            blobs = blobs.withColumn("seg_day", F.to_date("segment")).withColumn(
-                "tier_part", F.lit(tier)
+            blobs, branches[tier] = self._encode_segments(
+                tier, self._day_cells(tier, seg_of_day),
+                conv_ids=delta_convs if prune_convs else None,
             )
             if prune_convs:
                 seg_days = sorted({s.date() for s in seg_of_day})
@@ -721,7 +785,6 @@ class RollupPipeline:
     def _fold_and_blobs(
         self,
         affected_days,
-        cells_hint: int | None,
         prune_convs: bool,
         delta_convs,
         first_run: bool,
@@ -740,6 +803,7 @@ class RollupPipeline:
         blob_timings: dict[str, float] = {}
         blob_errors: list[BaseException] = []
         blob_bytes_box: dict[str, int] = {}
+        branches: dict[str, str] = {}
 
         def _spawn_blob(tier: str) -> _threading.Thread:
             def _run() -> None:
@@ -747,12 +811,7 @@ class RollupPipeline:
                 try:
                     blob_bytes_box[tier] = self._encode_and_commit_blobs(
                         [tier], f"blobs_{tier}", affected_days,
-                        prune_convs, delta_convs,
-                        # first runs encode FULL history, where cell
-                        # count ≈ turn count — bounds encode-group size
-                        # at scale; incremental windows are day-bounded
-                        # already
-                        cells_hint=cells_hint,
+                        prune_convs, delta_convs, branches,
                     )
                 except BaseException as e:  # noqa: BLE001 — rethrown below
                     blob_errors.append(e)
@@ -774,7 +833,7 @@ class RollupPipeline:
         t_fold0 = time.time()
         th_1m = _spawn_blob("1m")
 
-        upd_1m = day_filter(self.spark.read.parquet(self.tier_path("1m")))
+        upd_1m = day_filter(self._read_tier("1m"))
         upd_1h = fold_tier(upd_1m.drop("day"), "1h").withColumn(
             "day", F.to_date("bucket")
         )
@@ -782,9 +841,7 @@ class RollupPipeline:
         # 1h blobs only need the committed 1h tier — encode them while
         # the 1d fold runs
         th_1h = _spawn_blob("1h") if fine_split else None
-        upd_1h_read = day_filter(
-            self.spark.read.parquet(self.tier_path("1h"))
-        )
+        upd_1h_read = day_filter(self._read_tier("1h"))
         upd_1d = fold_tier(upd_1h_read.drop("day"), "1d").withColumn(
             "day", F.to_date("bucket")
         )
@@ -797,34 +854,21 @@ class RollupPipeline:
         tail_tiers = ["1d"] if fine_split else ["1h", "1d"]
         blob_bytes_box["tail"] = self._encode_and_commit_blobs(
             tail_tiers, "blobs_tail", affected_days, prune_convs,
-            delta_convs,
-            # coarse tiers hold ≲1/60 of the 1m cells; the turns bound
-            # still caps their group size on full-history runs
-            cells_hint=cells_hint,
+            delta_convs, branches,
         )
         metrics.log("tier_fold", tiers=["1h", "1d"])
         blob_bytes_written = sum(blob_bytes_box.values())
-        metrics.log("blobs", blob_bytes_written=int(blob_bytes_written))
+        metrics.log(
+            "blobs",
+            blob_bytes_written=int(blob_bytes_written),
+            encode_branch=dict(sorted(branches.items())),
+        )
         return {
             "fold_sec": round(fold_sec, 2),
             "blob_1m_sec": round(blob_timings.get("blob_1m", 0.0), 2),
             "total_sec": round(time.time() - t_all0, 2),
             "blob_bytes": int(blob_bytes_written),
         }
-
-    def _tier_footer_cells(self, tier: str) -> int:
-        """Exact tier cell count from the committed tier's parquet
-        footers — driver-side metadata only (Iceberg: manifest stats)."""
-        import pyarrow.parquet as pq
-
-        n = 0
-        for root, _dirs, files in os.walk(self.tier_path(tier)):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-        return n
 
     # ---- main entry ----
     def run(self) -> dict:
@@ -838,6 +882,7 @@ class RollupPipeline:
             stage_sec[name] = round(now - _last[0], 2)
             _last[0] = now
 
+        self._require_utc_session()
         ckpt = self.checkpoint()
         last = self.store.last_snapshot_id()
         after = ckpt["last_snapshot_id"]
@@ -881,7 +926,6 @@ class RollupPipeline:
             # from the write's own observation, the affected-day set
             # from the partition dirs it created (Iceberg: the commit's
             # manifest statistics).
-            import datetime as _dt2
             import threading
 
             timings: dict[str, float] = {}
@@ -920,18 +964,16 @@ class RollupPipeline:
                     # the write's remaining tail instead of waiting for
                     # the barrier (measured at sf1.0: write 32s, tier
                     # 19s; folds+blobs ~11s previously ran AFTER the
-                    # write).  The affected-day set and the cells hint
-                    # come from the tier's OWN partition dirs/footers
-                    # (day = to_date(bucket) == to_date(ts), the same
-                    # day set the store write creates); crash semantics
+                    # write).  The affected-day set comes from the
+                    # tier's OWN partition dirs (day = to_date(bucket)
+                    # == to_date(ts), the same day set the store write
+                    # creates); crash semantics
                     # are unchanged — the checkpoint still commits only
                     # after everything, and a crash mid-overlap replays
                     # into the same idempotent affected-day recompute as
                     # a crash mid-write did before.
-                    import datetime as _dt3
-
                     days_1m = sorted(
-                        _dt3.date.fromisoformat(sub.split("=", 1)[1])
+                        _dt.date.fromisoformat(sub.split("=", 1)[1])
                         for sub in os.listdir(self.tier_path("1m"))
                         if sub.startswith("day=")
                     )
@@ -939,7 +981,6 @@ class RollupPipeline:
                     if days_1m:
                         fold_box["result"] = self._fold_and_blobs(
                             days_1m,
-                            cells_hint=self._tier_footer_cells("1m"),
                             prune_convs=False,
                             delta_convs=None,
                             first_run=True,
@@ -963,7 +1004,7 @@ class RollupPipeline:
             overlap_wall = time.time() - t_overlap0
             counts, n_turns = ingest["counts"]
             affected_days = sorted(
-                _dt2.date.fromisoformat(sub.split("=", 1)[1])
+                _dt.date.fromisoformat(sub.split("=", 1)[1])
                 for sub in os.listdir(self.turns_path)
                 if sub.startswith("day=")
             )
@@ -1030,7 +1071,7 @@ class RollupPipeline:
         # lineage, bit-identical cells; tests diff the two paths.)
         day_filter = self._day_filter("day", affected_days)
         if not first_run:
-            turns_aff = day_filter(self.spark.read.parquet(self.turns_path))
+            turns_aff = day_filter(self._read_turns())
             # rebuild from (role, tool, ts, text_len) only — the text
             # payload never leaves the scan (parquet column pruning)
             upd_1m = rollup_transcripts(
@@ -1059,9 +1100,7 @@ class RollupPipeline:
         # aggregate inside the 1d branch (or fusing both tiers into one
         # GROUPING SETS job, which Expands every 1m cell twice) doubles
         # the shuffled fine-cell volume; chained folds shuffle 1x fine
-        # cells + 1x hour cells, the minimum.  (fold_tiers_multi in
-        # operators/rollup.py is the tested single-job alternative for
-        # setups where job-launch cost dominates shuffle volume.)
+        # cells + 1x hour cells, the minimum.
         if first_run:
             # folds + blobs already ran inside the tier thread,
             # overlapped with the store write (see _t_tier); surface
@@ -1085,7 +1124,7 @@ class RollupPipeline:
             mark("_pre_fold")
             stage_sec.pop("_pre_fold", None)
             fold_res = self._fold_and_blobs(
-                affected_days, cells_hint=None, prune_convs=prune_convs,
+                affected_days, prune_convs=prune_convs,
                 delta_convs=delta_convs, first_run=False, metrics=metrics,
             )
             stage_sec["tier_fold"] = fold_res["fold_sec"]
@@ -1164,9 +1203,7 @@ class RollupPipeline:
         survives).  ``now`` defaults to the newest day across tiers
         (data-relative, deterministic); returns per-tier deleted
         partition lists and logs a retention metric."""
-        import datetime as _dt
-
-        from tsforge_spark.codec.blobs import SEGMENT_TRUNC
+        self._require_utc_session()
 
         def _day_dirs(root: str, prefix: str = "day="):
             out = []
@@ -1195,6 +1232,7 @@ class RollupPipeline:
 
         deleted: dict = {}
         reencoded: dict = {}
+        branches: dict = {}
         for tier, max_age in policy.items():
             if max_age is None:
                 continue
@@ -1232,37 +1270,21 @@ class RollupPipeline:
             deleted[tier] = gone
             reencoded[tier] = [str(p.date()) for p in partial]
             if partial and not dry_run:
-                surviving = (
-                    self.spark.read.parquet(self.tier_path(tier))
-                    .filter(
-                        F.date_trunc(seg_unit, F.col("bucket")).isin(partial)
-                    )
-                )
+                day_cells = self._day_cells(tier, partial)
                 # a partial segment with NO surviving tier rows would be
                 # untouched by the dynamic overwrite — drop it outright
                 have = {
-                    r["m"]
-                    for r in surviving.select(
-                        F.to_date(
-                            F.date_trunc(seg_unit, F.col("bucket"))
-                        ).alias("m")
-                    )
-                    .distinct()
-                    .collect()
+                    _segment_start(d, seg_unit)
+                    for d, n in day_cells.items() if n
                 }
-                for p in list(partial):
-                    if p.date() not in have:
-                        partial.remove(p)
-                        reencoded[tier].remove(str(p.date()))
-                        deleted[tier].append(f"blob:{p.date()}")
-                        shutil.rmtree(
-                            os.path.join(tier_dir, f"seg_day={p.date()}")
-                        )
+                for p in [p for p in partial if p not in have]:
+                    partial.remove(p)
+                    reencoded[tier].remove(str(p.date()))
+                    deleted[tier].append(f"blob:{p.date()}")
+                    shutil.rmtree(os.path.join(tier_dir, f"seg_day={p.date()}"))
                 if partial:
-                    blobs = encode_tier_blobs(
-                        surviving.drop("day"), tier, self.measures
-                    ).withColumn("seg_day", F.to_date("segment")).withColumn(
-                        "tier_part", F.lit(tier)
+                    blobs, branches[tier] = self._encode_segments(
+                        tier, day_cells
                     )
                     self._merge_partitions(
                         blobs, self.blobs_path, ["tier_part", "seg_day"],
@@ -1275,6 +1297,7 @@ class RollupPipeline:
             dry_run=dry_run,
             deleted={k: len(v) for k, v in deleted.items()},
             reencoded={k: len(v) for k, v in reencoded.items()},
+            encode_branch=branches,
         )
         return {
             "status": "ok",
@@ -1296,8 +1319,6 @@ class RollupPipeline:
         directory names and rewritten as a data column, and such a
         store is always rewritten whole.  On Iceberg this is
         ``rewrite_data_files``.  Returns file counts before/after."""
-        import datetime as _dt
-
         def _count_files() -> int:
             n = 0
             for root, _dirs, files in os.walk(self.turns_path):
@@ -1306,7 +1327,7 @@ class RollupPipeline:
 
         self._heal_interrupted_swaps(self.turns_path)
         before = _count_files()
-        df = self.spark.read.parquet(self.turns_path)
+        df = self._read_turns()
         if days and not self._legacy_turns_days():
             days = [
                 d.date() if hasattr(d, "date") else _dt.date.fromisoformat(str(d))
@@ -1332,7 +1353,7 @@ class RollupPipeline:
 
     # ---- verification surfaces ----
     def read_tier(self, tier: str) -> DataFrame:
-        return self.spark.read.parquet(self.tier_path(tier)).drop("day")
+        return self._read_tier(tier).drop("day")
 
     def read_blobs(self, tier: str | None = None) -> DataFrame:
         # restore any partition whose swap a crash interrupted BEFORE
@@ -1355,7 +1376,7 @@ class RollupPipeline:
         """Per-turn text equality under stable turn ordering vs a
         reference frame (BASELINE.json invariant).  Returns the number of
         mismatching turns (0 = invariant holds)."""
-        ours = self.spark.read.parquet(self.turns_path).select(
+        ours = self._read_turns().select(
             "conv_id", "turn_idx", F.col("text").alias("text_ours")
         )
         theirs = reference.select("conv_id", "turn_idx", "text")

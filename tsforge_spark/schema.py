@@ -34,10 +34,28 @@ TIER_SCHEMA = T.StructType(
         T.StructField("user_turns", T.LongType(), False),
         T.StructField("assistant_turns", T.LongType(), False),
         T.StructField("text_chars", T.LongType(), False),
-        T.StructField("chars_min", T.LongType(), True),
-        T.StructField("chars_max", T.LongType(), True),
+        T.StructField("chars_min", T.IntegerType(), True),
+        T.StructField("chars_max", T.IntegerType(), True),
         T.StructField("first_ts", T.TimestampType(), True),
         T.StructField("last_ts", T.TimestampType(), True),
+    ]
+)
+
+# The stores as Spark lists them: file columns, then the ``day=``
+# partition column.  The engine's own reads pass these explicitly, so
+# Spark runs no schema-inference job per read.
+TIER_READ_SCHEMA = T.StructType(
+    TIER_SCHEMA.fields + [T.StructField("day", T.DateType(), True)]
+)
+# the canonical turns store: transcript columns plus the layout columns
+# the ingest adds (operators/skew.py salted_layout)
+TURNS_READ_SCHEMA = T.StructType(
+    TRANSCRIPT_SCHEMA.fields
+    + [
+        T.StructField("text_len", T.IntegerType(), True),
+        T.StructField("bucket_id", T.IntegerType(), True),
+        T.StructField("salt", T.IntegerType(), True),
+        T.StructField("day", T.DateType(), True),
     ]
 )
 
