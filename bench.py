@@ -28,6 +28,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench.probes import host_stamp, host_ticks  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 32))
 
@@ -37,38 +39,28 @@ METRIC = (
 )
 
 
-def _cpu_ticks() -> tuple[int, int]:
-    """(steal, total) jiffies from /proc/stat's aggregate cpu line.
-    Returns (0, 0) when unreadable (non-Linux) — steal_pct then
-    records None rather than a fake zero."""
+def _steal_begin() -> list[int] | None:
+    """Host CPU ticks at the start of a timed section, or None when
+    ``/proc/stat`` cannot be read (non-Linux)."""
     try:
-        with open("/proc/stat") as f:
-            parts = f.readline().split()
-        vals = [int(x) for x in parts[1:]]
-        steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
-    except (OSError, ValueError, IndexError):
-        return 0, 0
+        return host_ticks()
+    except (OSError, ValueError):
+        return None
 
 
-def _steal_begin() -> tuple[int, int]:
-    return _cpu_ticks()
-
-
-def _steal_pct(t0: tuple[int, int]) -> float | None:
+def _steal_pct(t0: list[int] | None) -> float | None:
     """Host steal% across the section begun at ``t0`` — the fraction of
     CPU time the hypervisor gave to OTHER guests while this section
-    ran.  Two rounds running, the gap between what the code does and
-    what a throttled-window record says had to be explained in prose
-    (r5 'regression' = 13-25% st; r6 headline 475k vs 535k clean);
+    ran (``perfbench.probes.host_stamp``, which counts guest time once).
+    Two rounds running, the gap between what the code does and what a
+    throttled-window record says had to be explained in prose (r5
+    'regression' = 13-25% st; r6 headline 475k vs 535k clean);
     sampling /proc/stat per timed section makes every recorded number
-    self-attributing instead."""
-    s0, tot0 = t0
-    s1, tot1 = _cpu_ticks()
-    d = tot1 - tot0
-    if d <= 0 or (tot0 == 0 and s0 == 0):
+    self-attributing instead.  None when the ticks cannot be read."""
+    t1 = _steal_begin()
+    if t0 is None or t1 is None:
         return None
-    return round(100.0 * (s1 - s0) / d, 2)
+    return round(host_stamp(t0, t1)["steal_pct"], 2)
 
 
 def _sf_from_dir(d: str) -> float:

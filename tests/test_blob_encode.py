@@ -7,9 +7,12 @@ session is refused before anything is written."""
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
 import json
 import os
+import threading
+import time
 
 import numpy as np
 import pandas as pd
@@ -74,26 +77,33 @@ def _last_blobs_entry(out_dir: str) -> dict:
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
     """A first run over a month boundary, then an 80-turn one-day
-    incremental run; records blob files per partition after each run and
-    the incremental run's job count."""
+    incremental run; records each run's result, job count and blob files
+    per partition."""
     root = tmp_path_factory.mktemp("blob_encode")
     base = make_transcripts(n_convs=40, seed=91, start="2025-01-20", span_days=16)
     store = SnapshotStore(str(root / "store"))
     store.append(transcripts_to_spark(spark, base))
     pipe = RollupPipeline(spark, store, str(root / "out"), n_buckets=4)
-    assert pipe.run()["status"] == "ok"
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def counted_run() -> tuple[dict, int]:
+        before = dag.numTotalJobs()
+        res = pipe.run()
+        return res, dag.numTotalJobs() - before
+
+    res_first, jobs_first = counted_run()
+    assert res_first["status"] == "ok"
     files_first = _blob_files(pipe.blobs_path)
     branch_first = _last_blobs_entry(pipe.out)["encode_branch"]
 
     store.append(transcripts_to_spark(spark, _one_day_delta(base, 92)))
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    before = dag.numTotalJobs()
-    res = pipe.run()
-    jobs = dag.numTotalJobs() - before
-    assert res["status"] == "ok" and res["affected_days"] == 1
+    res_inc, jobs_inc = counted_run()
+    assert res_inc["status"] == "ok" and res_inc["affected_days"] == 1
     return {
         "pipe": pipe, "root": root, "files_first": files_first,
-        "files_inc": _blob_files(pipe.blobs_path), "jobs_inc": jobs,
+        "files_inc": _blob_files(pipe.blobs_path),
+        "res_first": res_first, "res_inc": res_inc,
+        "jobs_first": jobs_first, "jobs_inc": jobs_inc,
         "branch_first": branch_first,
         "branch_inc": _last_blobs_entry(pipe.out)["encode_branch"],
     }
@@ -172,6 +182,49 @@ def test_small_incremental_run_job_count(built):
     spare the schema-inference jobs and driver-side encodes replace
     each tier's exchange with a collect."""
     assert built["jobs_inc"] <= 22, built["jobs_inc"]
+
+
+def test_first_run_job_count(built):
+    assert built["jobs_first"] <= 20, built["jobs_first"]
+
+
+def test_run_record(built):
+    """Each path reports the same named stages (plus the write ∥ tier
+    chain's shared wall on a first run) and logs one event per step."""
+    stages = {"probe", "prepare", "tier_1m", "tier_fold", "blob_1m", "blobs"}
+    with open(os.path.join(built["pipe"].out, "metrics.jsonl")) as f:
+        entries = [json.loads(line) for line in f]
+    for res, want in (
+        (built["res_first"], stages | {"overlap_wall"}),
+        (built["res_inc"], stages),
+    ):
+        assert set(res["stage_sec"]) == want
+        assert all(v >= 0 for v in res["stage_sec"].values()), res["stage_sec"]
+        events = [e["stage"] for e in entries if e["job_id"] == res["job_id"]]
+        assert events == ["ingest", "tier_1m", "tier_fold", "blobs", "done"]
+
+
+def test_fold_error_waits_for_blob_jobs(built, monkeypatch):
+    """A fold that raises re-raises only after the blob job running
+    beside it has finished, so no job outlives the failed run."""
+    pipe = built["pipe"]
+    finished = threading.Event()
+
+    def slow_blobs(*_args) -> int:
+        time.sleep(0.5)
+        finished.set()
+        return 0
+
+    def failing_merge(*_args) -> None:
+        raise RuntimeError("fold failed")
+
+    monkeypatch.setattr(pipe, "_encode_and_commit_blobs", slow_blobs)
+    monkeypatch.setattr(pipe, "_merge_partitions", failing_merge)
+    with pytest.raises(RuntimeError, match="fold failed"):
+        pipe._fold_and_blobs(
+            [dt.date(2025, 1, 25)], True, lambda _name: contextlib.nullcontext()
+        )
+    assert finished.is_set()
 
 
 def test_spark_branch_in_pipeline_writes_same_blobs(spark, built, tmp_path):

@@ -58,14 +58,7 @@ def test_full_run_and_incremental_refold(spark, base_pdf, tmp_path):
     store = SnapshotStore(str(tmp_path / "store"))
     store.append(transcripts_to_spark(spark, base_pdf))
 
-    # blob_conv_prune_limit ON here so the conv-pruned blob path (encode
-    # delta convs only + carry untouched convs' blobs) is covered by the
-    # strongest equality assertions below; other tests run the default
-    # whole-chunk path
-    pipe = RollupPipeline(
-        spark, store, str(tmp_path / "out"), n_buckets=8,
-        blob_conv_prune_limit=1000,
-    )
+    pipe = RollupPipeline(spark, store, str(tmp_path / "out"), n_buckets=8)
     r1 = pipe.run()
     assert r1["status"] == "ok"
     assert r1["turns"] == len(base_pdf)
@@ -145,7 +138,7 @@ def test_crash_recovery_heals_tiers(spark, tmp_path):
     store.append(transcripts_to_spark(spark, late))
     # ...and the "crashed" run only managed the prepare + turns append:
     delta = store.read(spark, after=1, upto=2)
-    clean = pipe._prepare(delta)
+    clean = pipe._prepare(delta).laid_out
     clean.withColumn("day", F.to_date("ts")).write.mode("append").partitionBy(
         "day"
     ).parquet(pipe.turns_path)
@@ -512,19 +505,17 @@ def test_interrupted_blob_swap_heals_and_keeps_carried_blobs(
 ):
     """Crash between the two renames of the blob partition swap leaves
     the old partition under ``.trash_<sub>`` with the live dir missing.
-    The next run must (a) restore it before the conv-pruned carried read
-    — otherwise untouched conversations' blobs would silently vanish —
-    and (b) converge to the same blobs as a full recompute."""
+    The next run must (a) restore it before its own swaps into that tier
+    — otherwise a segment the delta does not re-encode would stay
+    missing from the blob store — and (b) converge to the same blobs as
+    a full recompute."""
     import os
     import shutil
 
     base = make_transcripts(n_convs=30, seed=31)
     store = SnapshotStore(str(tmp_path / "store"))
     store.append(transcripts_to_spark(spark, base))
-    pipe = RollupPipeline(
-        spark, store, str(tmp_path / "out"), n_buckets=8,
-        blob_conv_prune_limit=1000,
-    )
+    pipe = RollupPipeline(spark, store, str(tmp_path / "out"), n_buckets=8)
     assert pipe.run()["status"] == "ok"
 
     # simulate the crash: one 1h seg_day partition renamed to trash, the
@@ -541,8 +532,8 @@ def test_interrupted_blob_swap_heals_and_keeps_carried_blobs(
     )
     assert not os.path.isdir(os.path.join(tier_dir, victim))
 
-    # a late batch arrives; the incremental run takes the conv-pruned
-    # carried path over the (healed) blob store
+    # a late batch arrives; the incremental run re-encodes the segments
+    # it touches and swaps them into the (healed) blob store
     late = make_late_batch(base, seed=32)
     store.append(transcripts_to_spark(spark, late))
     assert pipe.run()["status"] == "ok"

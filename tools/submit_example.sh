@@ -1,42 +1,26 @@
 #!/usr/bin/env bash
-# North-rule submit path: package the engine, ship it to executors with
-# --py-files, run the rollup pipeline on a multi-executor master.
+# The submit path: package the engine (tools/package_pyfiles.sh), ship it
+# to executors with --py-files, and run tools/submit_rollup.py, which
+# applies the engine confs (session.ENGINE_CONFS) itself, on a
+# multi-executor master.
 #
 #   tools/submit_example.sh [master] [workdir]
 #
 # Defaults exercise separate executor JVMs in the sandbox
 # (local-cluster[2,2,2048]); on a real cluster pass yarn / k8s:// /
-# spark://... and the same command works unchanged.
+# spark://... and the same command works unchanged.  An empty store at
+# <workdir>/store is first seeded with 300 demo conversations.
 set -euo pipefail
 
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 MASTER="${1:-local-cluster[2,2,2048]}"
 WORK="${2:-$(mktemp -d /tmp/tsforge_submit_XXXX)}"
-ZIP="$WORK/tsforge_spark.zip"
-
-# package the engine (package dir at the zip root => importable)
-(cd "$REPO" && python - "$ZIP" <<'EOF'
-import os, sys, zipfile
-zip_path = sys.argv[1]
-with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-    for root, _dirs, files in os.walk("tsforge_spark"):
-        if "__pycache__" in root:
-            continue
-        for f in files:
-            if f.endswith(".py"):
-                p = os.path.join(root, f)
-                z.write(p, p)
-print("packaged", zip_path)
-EOF
-)
+mkdir -p "$WORK"
+ZIP="$REPO/$(bash "$REPO/tools/package_pyfiles.sh")"
 
 spark-submit \
   --master "$MASTER" \
   --py-files "$ZIP" \
   --conf spark.sql.shuffle.partitions=8 \
-  --conf spark.sql.adaptive.enabled=true \
-  --conf spark.scheduler.mode=FAIR \
-  --conf spark.sql.execution.arrow.pyspark.enabled=true \
-  --conf spark.sql.sources.parallelPartitionDiscovery.threshold=8192 \
-  --conf spark.ui.enabled=false \
-  "$REPO/tools/submit_job.py" "$WORK/store" "$WORK/out" 300
+  "$REPO/tools/submit_rollup.py" \
+  --store "$WORK/store" --out "$WORK/out" --demo-convs 300

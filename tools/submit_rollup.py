@@ -1,6 +1,7 @@
 """Cluster entry point for the rollup pipeline.
 
-Run via spark-submit (the north-rule deployment shape)::
+Run via spark-submit (the north-rule deployment shape;
+tools/submit_example.sh does both steps)::
 
     bash tools/package_pyfiles.sh          # builds dist/tsforge_spark.zip
     spark-submit --py-files dist/tsforge_spark.zip \
@@ -9,9 +10,13 @@ Run via spark-submit (the north-rule deployment shape)::
         --out /path/to/engine-output [--n-buckets 256]
 
 On a cluster the SparkSession comes from spark-submit's conf (master,
-executors); locally this falls back to ``local[*]``.  The job is
-incremental + resumable: re-submitting after failure or new snapshots
-continues from the checkpoint.
+executors); locally this falls back to ``local[*]``.  The engine confs
+(``session.ENGINE_CONFS``) are applied here, so the submit command
+passes none of them.  The job is incremental + resumable:
+re-submitting after failure or new snapshots continues from the
+checkpoint.  ``--demo-convs N`` first seeds an empty store with N
+deterministic demo conversations, so the example is self-contained.
+Prints one JSON line with the run result.
 """
 
 from __future__ import annotations
@@ -36,6 +41,10 @@ def main() -> None:
         help="per-tier max age in days after the rollup, e.g. "
              "'1m=30,1h=180' (omitted tiers are kept forever)",
     )
+    p.add_argument(
+        "--demo-convs", type=int, default=None,
+        help="seed an empty store with this many demo conversations first",
+    )
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -49,9 +58,14 @@ def main() -> None:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
 
-    pipe = RollupPipeline(
-        spark, SnapshotStore(args.store), args.out, n_buckets=args.n_buckets
-    )
+    store = SnapshotStore(args.store)
+    if args.demo_convs and store.last_snapshot_id() == 0:
+        from tsforge_spark.fixtures import make_transcripts, transcripts_to_spark
+
+        store.append(
+            transcripts_to_spark(spark, make_transcripts(args.demo_convs, seed=42))
+        )
+    pipe = RollupPipeline(spark, store, args.out, n_buckets=args.n_buckets)
     result = pipe.run()
     if args.retention:
         policy = {

@@ -1,11 +1,12 @@
 """End-to-end rollup pipeline: ingest → 1m/1h/1d tiers → Gorilla blobs,
 incremental, resumable, with lineage + metrics.
 
-Dataflow (full or incremental — same code path):
+Dataflow (``RollupPipeline.run``: a first-run and an incremental path
+over the same stages):
 
   snapshot delta (SnapshotStore.read after checkpoint)
     → prepare: null-key drop, (conv_id, turn_idx) dedup (in-delta +
-      against already-ingested turns for affected buckets), hash-bucket
+      against already-ingested turns of the affected days), hash-bucket
       repartition + sortWithinPartitions(conv_id, ts, turn_idx)   [§4.2.2]
     → canonical ordered turns store (partitioned by day; bucket_id and
       salt ride as data columns, each file holds every conversation as
@@ -17,7 +18,7 @@ Dataflow (full or incremental — same code path):
       Iceberg MERGE INTO)
     → 1h, 1d tiers: re-fold affected days from the finer tier (reads
       1/60th resp. 1/24th of the touched rows — continuous aggregates)
-    → blobs: re-encode only affected (conv, segment) chunks
+    → blobs: re-encode only the segment chunks holding an affected day
     → lineage rows (job, stage, snapshot range, bucket_id, rows, bytes)
       + per-stage metrics (jsonl) + checkpoint commit.
 
@@ -47,6 +48,9 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -71,7 +75,43 @@ def _segment_start(d: _dt.date, unit: str) -> _dt.datetime:
     return _dt.datetime(d.year, d.month, d.day)
 
 
+def _day_partitions(root: str, prefix: str = "day=") -> list:
+    """Sorted ``(date, dir name)`` of the ``<prefix><iso date>``
+    partition directories under ``root`` (none when it is missing)."""
+    if not os.path.isdir(root):
+        return []
+    out = []
+    for sub in os.listdir(root):
+        if sub.startswith(prefix):
+            try:
+                out.append((_dt.date.fromisoformat(sub[len(prefix):]), sub))
+            except ValueError:
+                continue
+    return sorted(out)
+
+
+class _Prepared(NamedTuple):
+    """What ``RollupPipeline._prepare`` found and built from a delta."""
+
+    laid_out: DataFrame  # canonical turns-store layout, ready to write
+    content: DataFrame  # content-final rows before layout (first-run 1m source)
+    days: list | None  # affected days, when the day probe ran
+
+
 class RollupPipeline:
+    """The rollup engine over one snapshot store and one output dir.
+
+    ``run()`` is a sequence of named, timed stages — ``probe``,
+    ``prepare``, ``tier_1m``, ``tier_fold``, ``blob_1m``, ``blobs`` —
+    taken by one of two paths: ``_run_first`` overlaps the turns-store
+    write with the whole tier chain, ``_run_incremental`` stages the
+    delta, appends it and recomputes the affected days.  Each run leaves
+    a record in ``metrics.jsonl`` (``ingest``, ``tier_1m``,
+    ``tier_fold``, ``blobs``, ``done``) and ingest lineage rows.
+    ``enforce_retention`` expires old tier days and blob segments,
+    ``compact_turns`` rewrites the turns store, and ``read_tier``,
+    ``read_blobs`` and ``decoded_series`` serve the outputs."""
+
     def __init__(
         self,
         spark: SparkSession,
@@ -85,7 +125,6 @@ class RollupPipeline:
         day_literal_limit: int = 200,
         history_dedup_scope: str = "affected-days",
         unique_key_check: str = "probe",
-        blob_conv_prune_limit: int = 0,
     ):
         """``unique_key_check`` controls in-delta dedup verification:
 
@@ -132,22 +171,6 @@ class RollupPipeline:
         if unique_key_check not in ("probe", "trust"):
             raise ValueError("unique_key_check must be 'probe' or 'trust'")
         self.unique_key_check = unique_key_check
-        # a delta touching at most this many conversations re-encodes
-        # only THEIR blob segments (existing blobs of untouched convs in
-        # the same chunk are carried over by a bytes-level read, no
-        # decode/re-encode).  Default OFF: at bench scale the batched
-        # encoder makes whole-chunk re-encode cheaper than the carried
-        # copy (A/B'd: 3.5s vs 5.2s on a 2% delta / 20k convs).  Turn ON
-        # (set to the daily conv bound) when segment population is much
-        # larger than the delta — e.g. 100M convs/month vs 1M/day, where
-        # re-encoding every conversation's chunk for a 1% delta reads
-        # back the wide tier rows and burns encode CPU the carried copy
-        # never touches.
-        self.blob_conv_prune_limit = blob_conv_prune_limit
-        # set by _prepare's key probes; consumed by run() for lineage
-        self._probe_info: dict = {
-            "has_dups": False, "delta_convs": None,
-        }
         os.makedirs(out_dir, exist_ok=True)
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
@@ -271,12 +294,10 @@ class RollupPipeline:
             dim, df[col_name] == dim["_aff_day"], "left_semi"
         )
 
-    def _prepare(
-        self, delta: DataFrame, affected_days=None, need_days: bool = False
-    ) -> DataFrame:
+    def _prepare(self, delta: DataFrame, need_days: bool = False) -> _Prepared:
         """Clean + dedup + canonical bucketed/ordered layout.
 
-        Two key-only probes run CONCURRENTLY (narrow column-pruned scans
+        Key-only probes run CONCURRENTLY (narrow column-pruned scans
         submitted from separate threads fill each other's idle task
         slots):
 
@@ -286,17 +307,18 @@ class RollupPipeline:
           Hashing shrinks the probe shuffle to 8-byte keys; a hash
           collision can only cause a false *positive* verdict (an
           unnecessary dropDuplicates pass), never a wrong result.
-        - a fused per-bucket aggregate — ONE delta scan feeds the
-          hot-key set and the conv-prune id list; a concurrent day
-          probe supplies (when ``need_days``) the affected-day set.
-          Per-bucket lineage counts are not probed: they ride the turns
-          write itself (``_write_turns``).
+        - the hot-conversation ids (``skew.hot_keys``), and (when
+          ``need_days``) the affected-day set.  Per-bucket lineage
+          counts are not probed: they ride the turns write itself
+          (``_write_turns``).
 
         Affected days derive from the CLEAN (pre-dedup) delta: a row
         whose key columns are null never lands in any store, so its day
         needs no heal; rows dropped by DEDUP still contribute their days
         (the crash-replay anchor — a replayed snapshot whose rows were
         already ingested must still recompute the days it touched)."""
+        from tsforge_spark.operators.skew import hot_keys, salted_layout
+
         clean = delta.dropna(subset=["conv_id", "turn_idx", "ts"])
 
         def _dup_probe() -> bool:
@@ -312,63 +334,14 @@ class RollupPipeline:
                 > 0
             )
 
-        def _hot_probe() -> tuple:
-            # ONE action at the bucket grain carries everything bounded:
-            # the hot-conversation ids riding along
-            # as collect_list(when(count>thr)) — nulls are skipped, so
-            # the list holds only hots, small by definition — the
-            # per-bucket conv count (conv-prune gate), and, when pruning
-            # is enabled, the conv-id list itself (capped per bucket at
-            # limit+1 via slice: if the TOTAL is within the limit every
-            # bucket's list is complete, and when the total overflows
-            # the lists go unused, so the driver transfer is bounded by
-            # n_buckets·(limit+1) ids either way).  Job fixed cost
-            # dominates small deltas, so fewer+fused actions beat a
-            # cached frame with per-derivation jobs — a second
-            # per_conv.collect() here would re-scan and re-aggregate the
-            # whole delta.
-            per_conv = clean.groupBy("conv_id").agg(
-                F.count(F.lit(1)).alias("count")
-            )
-            agg_cols = [
-                F.collect_list(
-                    F.when(
-                        F.col("count") > self.hot_threshold,
-                        F.col("conv_id"),
-                    )
-                ).alias("hots"),
-                F.count(F.lit(1)).alias("n_convs"),
+        def _hot_probe() -> list:
+            # the hot set is small by definition, so the collect is too
+            return [
+                r[0] for r in hot_keys(clean, "conv_id", self.hot_threshold).collect()
             ]
-            if self.blob_conv_prune_limit > 0:
-                agg_cols.append(
-                    F.slice(
-                        F.collect_list("conv_id"),
-                        1,
-                        self.blob_conv_prune_limit + 1,
-                    ).alias("conv_ids")
-                )
-            rows = (
-                per_conv.groupBy(
-                    F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets))
-                    .cast("int")
-                    .alias("bucket_id")
-                )
-                .agg(*agg_cols)
-                .collect()
-            )
-            hots = [c for r in rows for c in r["hots"]]
-            delta_convs = None
-            if (
-                self.blob_conv_prune_limit > 0
-                and sum(int(r["n_convs"]) for r in rows)
-                <= self.blob_conv_prune_limit
-            ):
-                delta_convs = [c for r in rows for c in r["conv_ids"]]
-            return hots, delta_convs
 
         def _days_probe() -> list:
-            # map-side distinct to a handful of day rows; runs
-            # concurrently with the bucket probe
+            # map-side distinct to a handful of day rows
             return [
                 r["_d"]
                 for r in clean.select(F.to_date("ts").alias("_d"))
@@ -376,29 +349,20 @@ class RollupPipeline:
                 .collect()
             ]
 
-        from concurrent.futures import ThreadPoolExecutor
-
         # The probe scan is only worth paying when something consumes
-        # its output: dup verification (probe mode), the affected-day
-        # set (incremental runs), or the conv-prune id list.  A
-        # trust-mode FIRST run needs none of those — lineage counts ride
-        # the store write, days come from the partition dirs, and
-        # hot-conversation detection happens INLINE in
-        # salted_layout (hot_ids=None → a column-pruned self-aggregate +
-        # broadcast left join inside the write job: no separate driver
-        # round-trip, pipelined with the scan it already does).
-        need_probe = (
-            self.unique_key_check == "probe"
-            or need_days
-            or self.blob_conv_prune_limit > 0
-        )
-        if not need_probe:
-            has_dups = False
-            hot_ids, delta_convs, days = None, None, None
-        else:
-            # independent probes run CONCURRENTLY from driver threads
-            # (each is a narrow column-pruned scan; FAIR scheduling
-            # interleaves their tasks so wall ≈ the slowest one)
+        # its output: dup verification (probe mode) or the affected-day
+        # set (incremental runs).  A trust-mode FIRST run needs neither
+        # — lineage counts ride the store write, days come from the
+        # partition dirs, and hot-conversation detection happens INLINE
+        # in salted_layout (hot_ids=None → a column-pruned
+        # self-aggregate + broadcast left join inside the write job: no
+        # separate driver round-trip, pipelined with the scan it already
+        # does).  Trust mode skips only the in-delta verification (see
+        # __init__); history dedup still applies.
+        has_dups, hot_ids, days = False, None, None
+        if self.unique_key_check == "probe" or need_days:
+            # FAIR scheduling interleaves the probes' tasks, so their
+            # wall ≈ the slowest one
             with ThreadPoolExecutor(3) as ex:
                 f_dup = (
                     ex.submit(_dup_probe)
@@ -407,18 +371,9 @@ class RollupPipeline:
                 )
                 f_days = ex.submit(_days_probe) if need_days else None
                 f_hot = ex.submit(_hot_probe)
-                # trust mode: contract-clean input (see __init__) — no
-                # in-delta verification; history dedup still applies
-                has_dups = f_dup.result() if f_dup is not None else False
-                days = f_days.result() if f_days is not None else None
-                hot_ids, delta_convs = f_hot.result()
-        if need_days and affected_days is None:
-            affected_days = days
-        self._probe_info = {
-            "has_dups": has_dups,
-            "delta_convs": delta_convs,
-            "days": days,
-        }
+            has_dups = f_dup is not None and f_dup.result()
+            days = f_days.result() if f_days is not None else None
+            hot_ids = f_hot.result()
         if has_dups:
             clean = clean.dropDuplicates(["conv_id", "turn_idx"])
         existing = self._read_if_exists(self.turns_path)
@@ -431,8 +386,8 @@ class RollupPipeline:
             # instead of growing with total history size.  scope="full"
             # keeps the whole-history key scan for feeds that rewrite ts.
             keys = existing
-            if affected_days and self.history_dedup_scope == "affected-days":
-                keys = self._day_filter("day", affected_days)(keys)
+            if days and self.history_dedup_scope == "affected-days":
+                keys = self._day_filter("day", days)(keys)
             keys = keys.select("bucket_id", "conv_id", "turn_idx")
             clean = clean.withColumn(
                 "bucket_id",
@@ -440,16 +395,8 @@ class RollupPipeline:
             ).join(
                 keys, ["bucket_id", "conv_id", "turn_idx"], "left_anti"
             ).drop("bucket_id")
-        # the content-final (cleaned, deduped, anti-joined) frame BEFORE
-        # physical layout: run()'s first-run path rolls the 1m tier up
-        # from this directly — a groupBy needs no bucketed/sorted layout,
-        # so the rollup can run CONCURRENTLY with the store write instead
-        # of waiting to read the store back
-        self._clean_for_tier = clean
         # canonical layout: hash buckets + explicit hot-conversation salt
-        # (operators/skew.py) + stable (conv_id, ts, turn_idx) order
-        from tsforge_spark.operators.skew import salted_layout
-
+        # (operators/skew.py) + stable (conv_id, ts, turn_idx) order.
         # text_len rides the store so tier rebuilds can column-prune the
         # text payload itself (the bulk of the store's bytes).
         # The store is written partitionBy("day"), so the layout sort
@@ -459,7 +406,7 @@ class RollupPipeline:
         # the writer plans its own Sort [day] and the optimizer drops
         # the layout sort beneath it, so files lose per-conversation
         # contiguity and (ts, turn_idx) order.
-        return salted_layout(
+        laid_out = salted_layout(
             clean.withColumn("text_len", F.length("text")).withColumn(
                 "day", F.to_date("ts")
             ),
@@ -475,19 +422,21 @@ class RollupPipeline:
             extra_partition_cols=("day",),
             sort_prefix=("day",),
         )
+        return _Prepared(laid_out, clean, days)
 
     def _stage_dir(self, name: str) -> str:
         return os.path.join(self.out, "_staging", name)
 
     def _merge_partitions(
-        self, new_df: DataFrame, target: str, partition_cols, stage: str
+        self, new_df: DataFrame, target: str, partition_cols
     ) -> None:
         """Dynamic-overwrite only the partitions present in ``new_df``
         (Iceberg: MERGE INTO).  A direct write is safe because no tier or
         blob merge reads its own target (tiers derive from the turns
         store / the finer tier; blobs derive from tier stores) — the only
         self-referential write in the pipeline is the ingest anti-join,
-        which keeps its explicit staging materialization in ``run``.
+        which keeps its explicit staging materialization in
+        ``_run_incremental``.
 
         Crash semantics: new files land under the job's temporary dir and
         partition replacement happens at job commit, so a crash mid-write
@@ -500,7 +449,6 @@ class RollupPipeline:
         new_df.write.mode("overwrite").partitionBy(*partition_cols).parquet(
             target
         )
-        _ = stage  # kept for call-site symmetry / future Iceberg MERGE
 
     def _write_turns(self, prepared: DataFrame, path: str) -> tuple[list, int]:
         """Write the laid-out turns ``partitionBy("day")`` to ``path`` and
@@ -552,9 +500,9 @@ class RollupPipeline:
         missing means the old partition was renamed away but the new one
         never landed — restore it (the replay recompute then overwrites
         it normally).  A leftover WITH ``<sub>`` present is post-install
-        debris — drop it.  Must run before any read of ``target`` that
-        assumes partition completeness (the conv-pruned carried-blob
-        read), not just before the next commit.
+        debris — drop it.  Runs before every swap into ``target`` and
+        before serving reads of it (``read_blobs``), so a read after a
+        crash sees the pre-swap bytes rather than a missing partition.
 
         Every filesystem op tolerates concurrent mutation (OSError →
         skip): a serving reader may run this while a live writer is
@@ -649,15 +597,11 @@ class RollupPipeline:
         import pyarrow.parquet as pq
 
         unit, want = SEGMENT_TRUNC[tier], set(segments)
-        root = self.tier_path(tier)
         out = {}
-        for sub in sorted(os.listdir(root)):
-            if not sub.startswith("day="):
-                continue
-            day = _dt.date.fromisoformat(sub[len("day="):])
+        for day, sub in _day_partitions(self.tier_path(tier)):
             if _segment_start(day, unit) not in want:
                 continue
-            part = os.path.join(root, sub)
+            part = os.path.join(self.tier_path(tier), sub)
             out[day] = sum(
                 pq.ParquetFile(os.path.join(part, f)).metadata.num_rows
                 for f in os.listdir(part)
@@ -666,17 +610,14 @@ class RollupPipeline:
         return out
 
     def _encode_segments(
-        self, tier: str, day_cells: dict, conv_ids=None
+        self, tier: str, day_cells: dict
     ) -> tuple[DataFrame, str]:
         """Blob rows, with their store partition columns, of the
         ``tier`` cells in the day partitions of ``day_cells`` (whole
-        segments, as ``_day_cells`` lists them; optionally only
-        ``conv_ids``' cells), and the encode branch taken.  The footer
-        count bounds the slice, so one that fits an Arrow batch encodes
-        on the driver (``encode_tier_blobs``)."""
+        segments, as ``_day_cells`` lists them), and the encode branch
+        taken.  The footer count bounds the slice, so one that fits an
+        Arrow batch encodes on the driver (``encode_tier_blobs``)."""
         cells = self._day_filter("day", sorted(day_cells))(self._read_tier(tier))
-        if conv_ids is not None:
-            cells = cells.filter(F.col("conv_id").isin(conv_ids))
         hint = sum(day_cells.values())
         blobs = encode_tier_blobs(
             cells.drop("day"), tier, self.measures, cells_hint=hint
@@ -690,80 +631,46 @@ class RollupPipeline:
         )
 
     def _encode_and_commit_blobs(
-        self,
-        tiers: list,
-        staging_name: str,
-        affected_days,
-        prune_convs: bool,
-        delta_convs,
-        branches: dict,
+        self, tiers: list, staging_name: str, affected_days, branches: dict
     ) -> int:
-        """Re-encode the affected (tier, segment) blob chunks for a
-        GROUP of tiers and commit them (stage → atomic per-partition
-        move).  Returns bytes written this call and records each tier's
+        """Re-encode every blob chunk (whole segments, every
+        conversation) of ``tiers`` that holds an affected day, and commit
+        them.  Returns bytes written this call and records each tier's
         encode branch in ``branches``.
 
         All tiers in the group union into ONE write job (fewer
-        fixed-cost job launches; blobs derive from tier tables, so no
-        extra staging materialization is needed).  Each tier's slice is
-        bounded by the footer cell count of the day partitions it can
-        touch, which picks the encode branch (``encode_tier_blobs``): a
-        slice that fits one Arrow batch encodes on the driver.  Bytes
-        written ride the write job as an observation metric (one cheap
-        sum — Iceberg: commit manifest statistics); a readback scan, even
-        partition-pruned, would be a whole extra job.  Staging + atomic
-        per-partition moves (not a direct dynamic overwrite): the
-        conv-pruned path READS the blob store it replaces, so the swap
-        must happen only after the carried bytes are safely rewritten —
-        each seg_day partition swaps via rename-to-trash (old bytes
-        survive a mid-swap crash under ``.trash_*`` and are restored by
-        ``_heal_interrupted_swaps`` before the next carried read).
+        fixed-cost job launches).  Each tier's slice is bounded by the
+        footer cell count of the day partitions it can touch, which
+        picks the encode branch (``encode_tier_blobs``): a slice that
+        fits one Arrow batch encodes on the driver.  Bytes written ride
+        the write job as an observation metric (Iceberg: commit manifest
+        statistics); a readback scan would be a whole extra job.
 
-        conv-pruned fast path (``prune_convs``): only DELTA
-        conversations' tier cells can have changed, so when the delta
-        is small (daily batch) encode just their segments and carry the
-        untouched conversations' existing blobs over with a bytes-level
-        read (no decode, no re-encode) — a month chunk at 1h/1d grain
-        otherwise re-encodes every conversation in the store for a 2%
-        delta."""
+        The group writes to its own staging dir and each ``seg_day``
+        partition then swaps into ``tier_part=<tier>`` by rename
+        (``_replace_partitions_by_move``), rather than a dynamic
+        overwrite of the blob store:
+
+        - blob groups commit concurrently (``_fold_and_blobs``), and
+          writers sharing one output path would share its
+          ``_temporary`` dir; with a staging dir each, a group only
+          lists and mutates its own tiers' subtrees.
+        - the blob store is the serving surface (``read_series``,
+          ``read_blobs``).  A crash inside a swap leaves the old bytes
+          under ``.trash_<sub>``, which ``_heal_interrupted_swaps``
+          restores before the next swap or serving read, so readers
+          never see a missing partition between the crash and the
+          replay that re-encodes it."""
         from pyspark.sql import Observation
 
         all_blobs = None
         for tier in tiers:
-            seg_unit = SEGMENT_TRUNC[tier]
-            seg_of_day = sorted(
-                {_segment_start(d, seg_unit) for d in affected_days}
-            )
+            segments = {
+                _segment_start(d, SEGMENT_TRUNC[tier]) for d in affected_days
+            }
             blobs, branches[tier] = self._encode_segments(
-                tier, self._day_cells(tier, seg_of_day),
-                conv_ids=delta_convs if prune_convs else None,
+                tier, self._day_cells(tier, segments)
             )
-            if prune_convs:
-                seg_days = sorted({s.date() for s in seg_of_day})
-                # Read ONLY this tier's subtree.  Reading the whole blobs
-                # root here would eagerly list tier_part=* dirs that a
-                # CONCURRENT blob thread (1m ∥ 1h under fine_split) is
-                # mid-swap on — a vanished-path FileNotFoundException
-                # race.  Per-tier read + per-tier commit means each
-                # thread lists and mutates only its own subtree, so the
-                # threads never observe each other's commits at all.
-                tier_blob_dir = os.path.join(
-                    self.blobs_path, f"tier_part={tier}"
-                )
-                self._heal_interrupted_swaps(tier_blob_dir)
-                if os.path.isdir(tier_blob_dir):
-                    carried = (
-                        self.spark.read.parquet(tier_blob_dir)
-                        .filter(
-                            F.col("seg_day").isin(seg_days)
-                            & ~F.col("conv_id").isin(delta_convs)
-                        )
-                        .withColumn("tier_part", F.lit(tier))
-                    )
-                    blobs = blobs.unionByName(
-                        carried.select(*blobs.columns),
-                        allowMissingColumns=False,
-                    )
             all_blobs = blobs if all_blobs is None else all_blobs.unionByName(blobs)
         obs_blobs = Observation()
         all_blobs = all_blobs.observe(
@@ -783,105 +690,87 @@ class RollupPipeline:
         return int(obs_blobs.get["bytes"] or 0)
 
     def _fold_and_blobs(
-        self,
-        affected_days,
-        prune_convs: bool,
-        delta_convs,
-        first_run: bool,
-        metrics,
-    ) -> dict:
-        """1h/1d folds ∥ blob encodes for the affected days (the fold
-        topology and thread split documented at the call sites).
-        Extracted from ``run`` (round 8) so the FIRST-RUN path can
-        chain it inside the tier thread, overlapping the whole fold +
-        blob section with the store write — it depends only on the
-        committed 1m tier, never on the turns-store write.  Returns
-        stage timings + bytes for the caller's accounting."""
-        import threading as _threading
+        self, affected_days, first_run: bool, stage
+    ) -> tuple[int, dict]:
+        """Fold the committed 1m tier's affected days into 1h and 1d and
+        re-encode their blobs; returns ``(blob bytes written, encode
+        branch per tier)``.  Times ``tier_fold``, ``blob_1m`` and
+        ``blobs`` under ``stage``.
 
+        The 1m blobs (the bulk of the encode work — 60× the cells of 1h)
+        depend on nothing the folds produce, so a second driver thread
+        encodes and commits them while this one folds; FAIR scheduling
+        interleaves the two jobs' tasks.  1h/1d blobs encode after their
+        tiers commit.  Every group uses the same commit protocol, so a
+        crash between two blob commits leaves some tiers' blobs stale,
+        healed by the replay recompute like any mid-commit crash.
+
+        Fold topology: 1d folds from the WRITTEN 1h partitions (a tiny
+        read-back), not from the 1h plan — recomputing the 1h aggregate
+        inside the 1d branch (or fusing both tiers into one GROUPING SETS
+        job, which Expands every 1m cell twice) doubles the shuffled
+        fine-cell volume; chained folds shuffle 1x fine cells + 1x hour
+        cells, the minimum.
+
+        Split granularity is adaptive: big (re)builds use the finest
+        pipelining (1h blobs ∥ 1d fold — a third blob job whose launch
+        cost is dwarfed by the encode), while small incremental deltas
+        batch 1h+1d into one job — their encodes are tiny, so an extra
+        job launch costs more than the overlap saves (A/B'd on the sf0.1
+        daily delta)."""
         day_filter = self._day_filter("day", affected_days)
-        blob_timings: dict[str, float] = {}
-        blob_errors: list[BaseException] = []
-        blob_bytes_box: dict[str, int] = {}
+        fine_split = first_run or len(affected_days) > 4
         branches: dict[str, str] = {}
 
-        def _spawn_blob(tier: str) -> _threading.Thread:
-            def _run() -> None:
-                t0 = time.time()
-                try:
-                    blob_bytes_box[tier] = self._encode_and_commit_blobs(
-                        [tier], f"blobs_{tier}", affected_days,
-                        prune_convs, delta_convs, branches,
-                    )
-                except BaseException as e:  # noqa: BLE001 — rethrown below
-                    blob_errors.append(e)
-                blob_timings[f"blob_{tier}"] = time.time() - t0
+        def blobs(tiers: list, name: str) -> int:
+            return self._encode_and_commit_blobs(
+                tiers, f"blobs_{name}", affected_days, branches
+            )
 
-            t = _threading.Thread(target=_run)
-            t.start()
-            return t
+        def blobs_1m() -> int:
+            with stage("blob_1m"):
+                return blobs(["1m"], "1m")
 
-        # Split granularity is adaptive: big (re)builds use the finest
-        # pipelining (1h blobs ∥ 1d fold — a third blob job whose launch
-        # cost is dwarfed by the encode), while small incremental deltas
-        # batch 1h+1d into one job — their encodes are tiny, so an extra
-        # job launch costs more than the overlap saves (A/B'd on the
-        # sf0.1 daily delta).
-        fine_split = first_run or len(affected_days) > 4
-
-        t_all0 = time.time()
-        t_fold0 = time.time()
-        th_1m = _spawn_blob("1m")
-
-        upd_1m = day_filter(self._read_tier("1m"))
-        upd_1h = fold_tier(upd_1m.drop("day"), "1h").withColumn(
-            "day", F.to_date("bucket")
-        )
-        self._merge_partitions(upd_1h, self.tier_path("1h"), "day", "t1h")
-        # 1h blobs only need the committed 1h tier — encode them while
-        # the 1d fold runs
-        th_1h = _spawn_blob("1h") if fine_split else None
-        upd_1h_read = day_filter(self._read_tier("1h"))
-        upd_1d = fold_tier(upd_1h_read.drop("day"), "1d").withColumn(
-            "day", F.to_date("bucket")
-        )
-        self._merge_partitions(upd_1d, self.tier_path("1d"), "day", "t1d")
-        fold_sec = time.time() - t_fold0
-        for t in (th_1m, th_1h) if th_1h is not None else (th_1m,):
-            t.join()
-        if blob_errors:
-            raise blob_errors[0]
-        tail_tiers = ["1d"] if fine_split else ["1h", "1d"]
-        blob_bytes_box["tail"] = self._encode_and_commit_blobs(
-            tail_tiers, "blobs_tail", affected_days, prune_convs,
-            delta_convs, branches,
-        )
-        metrics.log("tier_fold", tiers=["1h", "1d"])
-        blob_bytes_written = sum(blob_bytes_box.values())
-        metrics.log(
-            "blobs",
-            blob_bytes_written=int(blob_bytes_written),
-            encode_branch=dict(sorted(branches.items())),
-        )
-        return {
-            "fold_sec": round(fold_sec, 2),
-            "blob_1m_sec": round(blob_timings.get("blob_1m", 0.0), 2),
-            "total_sec": round(time.time() - t_all0, 2),
-            "blob_bytes": int(blob_bytes_written),
-        }
+        # leaving the pool waits for every blob job, also when a fold or
+        # another blob job raised
+        with ThreadPoolExecutor(2) as pool:
+            pending = [pool.submit(blobs_1m)]
+            with stage("tier_fold"):
+                for finer, tier in (("1m", "1h"), ("1h", "1d")):
+                    upd = fold_tier(
+                        day_filter(self._read_tier(finer)).drop("day"), tier
+                    ).withColumn("day", F.to_date("bucket"))
+                    self._merge_partitions(upd, self.tier_path(tier), "day")
+                    if tier == "1h" and fine_split:
+                        pending.append(pool.submit(blobs, ["1h"], "1h"))
+            with stage("blobs"):
+                written = sum(f.result() for f in pending)
+                written += blobs(["1d"] if fine_split else ["1h", "1d"], "tail")
+        return written, branches
 
     # ---- main entry ----
     def run(self) -> dict:
         """Process every snapshot after the checkpoint; no-op when
-        up-to-date.  Returns per-stage metrics incl. turns/sec."""
+        up-to-date.  Returns the run record: turns, wall, turns/sec,
+        blob bytes, ``stage_sec`` and ``stage_bytes``.
+
+        A shared head probes and prepares the delta (``_prepare``); one
+        of two paths ingests it and rebuilds the affected days' tiers
+        and blobs — ``_run_first`` on an output with no turns store,
+        ``_run_incremental`` otherwise; a shared tail logs the run and
+        commits the checkpoint.  Every step runs under ``stage(name)``,
+        which records its wall seconds in ``stage_sec``: ``probe``,
+        ``prepare``, ``tier_1m``, ``tier_fold``, ``blob_1m`` and
+        ``blobs``, plus ``overlap_wall`` on first runs, whose ``prepare``
+        (the store write) and tier chain run concurrently.
+
+        Affected event days derive from the PRE-dedup delta, so a crash
+        replay (turns already appended, tiers not yet rebuilt) still
+        knows which day partitions to heal even though dedup reduces the
+        delta to zero rows: every step is an idempotent recompute over
+        those days, and the checkpoint only advances after all of them
+        commit."""
         t0 = time.time()
-        stage_sec: dict[str, float] = {}
-
-        def mark(name: str, _last=[t0]) -> None:
-            now = time.time()
-            stage_sec[name] = round(now - _last[0], 2)
-            _last[0] = now
-
         self._require_utc_session()
         ckpt = self.checkpoint()
         last = self.store.last_snapshot_id()
@@ -890,254 +779,44 @@ class RollupPipeline:
             return {"status": "up-to-date", "last_snapshot_id": after}
         job_id = new_job_id()
         metrics = MetricsLog(os.path.join(self.out, "metrics.jsonl"), job_id)
+        stage_sec: dict[str, float] = {}
 
-        self._check_turns_layout()
-        delta = self.store.read(self.spark, after=after, upto=last)
+        @contextmanager
+        def stage(name: str):
+            start = time.time()
+            yield
+            stage_sec[name] = round(time.time() - start, 2)
+
+        def ingested(counts: list, n_turns: int) -> None:
+            metrics.log("ingest", rows=n_turns, snapshots=[after + 1, last])
+            if n_turns > 0:
+                # lineage at the hash-bucket grain, from the ingest
+                # write's observation; written driver-side: ≤ n_buckets
+                # tiny rows don't justify a Spark job's fixed cost
+                append_lineage(
+                    self.lineage_path, job_id, "ingest", last, counts,
+                    detail=f"after={after}",
+                )
+
         first_run = after == 0 and not os.path.exists(self.turns_path)
-        # Affected event days: _prepare's concurrent day probe on
-        # incremental runs; on first runs they come free from the
-        # partition dirs the store write creates.  Days derive from the
-        # PRE-dedup delta, so a crash replay (turns already appended,
-        # tiers not yet rebuilt) still knows which day partitions to
-        # heal even though dedup reduces the delta to zero rows — the
-        # crash-safety anchor:
-        # every stage below is an idempotent recompute over these days.
-
-        # Materialize the prepared delta to immutable staging files FIRST:
-        # `_prepare` anti-joins against the turns store, so once we append
-        # to that store any lazy recomputation of the plan would see its
-        # own output and produce an empty delta.  Staging breaks the
-        # self-referential lineage (on Iceberg, snapshot isolation of the
-        # MERGE does this for free).
-        ingest_staging = self._stage_dir("ingest")
-        prepared = self._prepare(delta, need_days=not first_run)
-        mark("probe")  # _prepare's eager probe jobs (hot keys/buckets/days)
-        affected_days = self._probe_info.get("days")
-        if first_run:
-            # no history → no anti-join self-reference, so the
-            # turns-store write IS the materialization (saves a full
-            # staging write), and the 1m tier rolls up from the SAME
-            # content-final frame CONCURRENTLY — the write is IO-bound,
-            # the rollup CPU-bound, and FAIR scheduling interleaves
-            # their tasks (a tier rebuilt from the store would read the
-            # store back AFTER the write finished; on a first run the
-            # store content IS the prepared delta, so deriving the tier
-            # from the same lineage is bit-identical).  Row counts come
-            # from the write's own observation, the affected-day set
-            # from the partition dirs it created (Iceberg: the commit's
-            # manifest statistics).
-            import threading
-
-            timings: dict[str, float] = {}
-            errors: list[BaseException] = []
-            ingest: dict = {}
-
-            def _t_write() -> None:
-                t0 = time.time()
-                try:
-                    ingest["counts"] = self._write_turns(
-                        prepared, self.turns_path
-                    )
-                except BaseException as e:  # noqa: BLE001 — rethrown below
-                    errors.append(e)
-                timings["write"] = time.time() - t0
-
-            fold_box: dict = {}
-
-            def _t_tier() -> None:
-                t0 = time.time()
-                try:
-                    upd = rollup_transcripts(
-                        self._clean_for_tier.select(
-                            "conv_id", "role", "tool", "ts", "text"
-                        ),
-                        "1m",
-                    ).withColumn("day", F.to_date("bucket"))
-                    self._merge_partitions(
-                        upd, self.tier_path("1m"), "day", "t1m"
-                    )
-                    timings["tier"] = time.time() - t0
-                    # Chain the 1h/1d folds + blob encodes HERE (round
-                    # 8): they depend only on the 1m tier committed one
-                    # line up — never on the turns-store write — so on a
-                    # first run the entire fold+blob section overlaps
-                    # the write's remaining tail instead of waiting for
-                    # the barrier (measured at sf1.0: write 32s, tier
-                    # 19s; folds+blobs ~11s previously ran AFTER the
-                    # write).  The affected-day set comes from the
-                    # tier's OWN partition dirs (day = to_date(bucket)
-                    # == to_date(ts), the same day set the store write
-                    # creates); crash semantics
-                    # are unchanged — the checkpoint still commits only
-                    # after everything, and a crash mid-overlap replays
-                    # into the same idempotent affected-day recompute as
-                    # a crash mid-write did before.
-                    days_1m = sorted(
-                        _dt.date.fromisoformat(sub.split("=", 1)[1])
-                        for sub in os.listdir(self.tier_path("1m"))
-                        if sub.startswith("day=")
-                    )
-                    fold_box["days"] = days_1m
-                    if days_1m:
-                        fold_box["result"] = self._fold_and_blobs(
-                            days_1m,
-                            prune_convs=False,
-                            delta_convs=None,
-                            first_run=True,
-                            metrics=metrics,
-                        )
-                except BaseException as e:  # noqa: BLE001 — rethrown below
-                    errors.append(e)
-                timings.setdefault("tier", time.time() - t0)
-
-            t_overlap0 = time.time()
-            threads = [
-                threading.Thread(target=_t_write),
-                threading.Thread(target=_t_tier),
-            ]
-            for t in threads:
-                t.start()
-            for t in threads:
-                t.join()
-            if errors:
-                raise errors[0]
-            overlap_wall = time.time() - t_overlap0
-            counts, n_turns = ingest["counts"]
-            affected_days = sorted(
-                _dt.date.fromisoformat(sub.split("=", 1)[1])
-                for sub in os.listdir(self.turns_path)
-                if sub.startswith("day=")
+        with stage("probe"):
+            self._check_turns_layout()
+            delta = self.store.read(self.spark, after=after, upto=last)
+            prep = self._prepare(delta, need_days=not first_run)
+        path = self._run_first if first_run else self._run_incremental
+        n_turns, days, blob_bytes, branches = path(prep, stage, ingested)
+        if days:
+            metrics.log("tier_1m", affected_days=len(days))
+            metrics.log("tier_fold", tiers=["1h", "1d"])
+            metrics.log(
+                "blobs", blob_bytes_written=blob_bytes,
+                encode_branch=dict(sorted(branches.items())),
             )
-        else:
-            # stage ALREADY day-partitioned: the append then becomes a
-            # driver-side file move (the plain-parquet stand-in for an
-            # Iceberg fast-append commit, which is exactly "add these
-            # data files to the table"), and the exact post-anti-join
-            # row counts ride the staging write — no readback aggregate
-            # job, no second write of the delta.
-            shutil.rmtree(ingest_staging, ignore_errors=True)
-            counts, n_turns = self._write_turns(prepared, ingest_staging)
-        if first_run:
-            # overlapped stage accounting: prepare = the store write's
-            # own duration, tier_1m = the rollup's own duration; their
-            # shared wall is overlap_wall (< prepare + tier_1m when the
-            # interleave pays off).  mark()'s running clock is advanced
-            # by the barrier wall so the stage sum still reconciles.
-            stage_sec["prepare"] = round(timings.get("write", 0.0), 2)
-            stage_sec["tier_1m"] = round(timings.get("tier", 0.0), 2)
-            stage_sec["overlap_wall"] = round(overlap_wall, 2)
-            mark("_overlap")
-            stage_sec.pop("_overlap", None)
-        else:
-            mark("prepare")
-        metrics.log("ingest", rows=n_turns, snapshots=[after + 1, last])
-
-        if not affected_days:
-            ckpt.update(last_snapshot_id=last, runs=ckpt["runs"] + 1)
-            self._commit_checkpoint(ckpt)
-            return {"status": "empty-delta", "turns": 0}
-
-        # canonical ordered turns store (append — rows are new by dedup;
-        # on a first run the store write already happened above).  The
-        # staged files are already in final day layout and final sort
-        # order, so the append is a metadata-only file move.
-        # Crash mid-move leaves a subset appended — healed by the replay
-        # contract (dedup-against-history drops the moved rows, the
-        # affected-day recompute rebuilds the tiers), same convergence
-        # as a crash mid-commit of the previous write-job append.
-        if not first_run and n_turns > 0:
-            self._move_staged_files(ingest_staging, self.turns_path)
-        mark("turns_store")
-
-        if n_turns > 0:
-            # lineage at the hash-bucket grain — counts are the ingest
-            # write's observation on every path (the store write on
-            # first runs, the delta staging write on incremental runs);
-            # written driver-side: ≤ n_buckets tiny rows don't justify a
-            # Spark job's fixed launch+commit cost
-            append_lineage(
-                self.lineage_path, job_id, "ingest", last, counts,
-                detail=f"after={after}",
-            )
-        mark("lineage")
-
-        # ---- 1m tier: recompute affected day partitions from the
-        # authoritative turns store (day-partition pruned scan).  A full
-        # per-day recompute — rather than merging delta partials into old
-        # cells — makes every run idempotent: replaying the same snapshot
-        # (crash recovery, duplicate batch) converges to the same tiers.
-        # (On a first run the 1m tier was already built concurrently with
-        # the store write above — store content == prepared delta, same
-        # lineage, bit-identical cells; tests diff the two paths.)
-        day_filter = self._day_filter("day", affected_days)
-        if not first_run:
-            turns_aff = day_filter(self._read_turns())
-            # rebuild from (role, tool, ts, text_len) only — the text
-            # payload never leaves the scan (parquet column pruning)
-            upd_1m = rollup_transcripts(
-                turns_aff.select("conv_id", "role", "tool", "ts", "text_len"),
-                "1m",
-                text_len_col="text_len",
-            ).withColumn("day", F.to_date("bucket"))
-            self._merge_partitions(upd_1m, self.tier_path("1m"), "day", "t1m")
-            mark("tier_1m")
-        metrics.log("tier_1m", affected_days=len(affected_days))
-
-        # ---- 1h / 1d folds ∥ 1m blob encode.  The 1m tier is final as
-        # soon as its merge commits, and the 1m blobs (the bulk of the
-        # encode work — 60× the cells of 1h) depend on NOTHING the folds
-        # produce, so a second driver thread encodes+commits them while
-        # the main thread folds 1h/1d; FAIR scheduling interleaves the
-        # two jobs' tasks.  1h/1d blobs then encode after their tiers
-        # commit.  Same commit protocol per group (stage → atomic
-        # per-partition move), so crash semantics are unchanged — a
-        # crash between the two blob commits leaves some tiers' blobs
-        # stale, healed by the replay recompute like any mid-commit
-        # crash.
-        #
-        # Fold topology: 1d folds from the WRITTEN 1h partitions (a tiny
-        # read-back), not from the 1h plan — recomputing the 1h
-        # aggregate inside the 1d branch (or fusing both tiers into one
-        # GROUPING SETS job, which Expands every 1m cell twice) doubles
-        # the shuffled fine-cell volume; chained folds shuffle 1x fine
-        # cells + 1x hour cells, the minimum.
-        if first_run:
-            # folds + blobs already ran inside the tier thread,
-            # overlapped with the store write (see _t_tier); surface
-            # their timings into the stage accounting.  mark() is NOT
-            # advanced — their wall was inside overlap_wall.
-            fold_res = fold_box.get("result") or {
-                "fold_sec": 0.0, "blob_1m_sec": 0.0, "total_sec": 0.0,
-                "blob_bytes": 0,
-            }
-            stage_sec["tier_fold"] = fold_res["fold_sec"]
-            stage_sec["blob_1m"] = fold_res["blob_1m_sec"]
-            stage_sec["blobs"] = round(
-                fold_res["total_sec"] - fold_res["fold_sec"], 2
-            )
-        else:
-            delta_convs = self._probe_info.get("delta_convs")
-            prune_convs = (
-                delta_convs is not None
-                and os.path.exists(self.blobs_path)
-            )
-            mark("_pre_fold")
-            stage_sec.pop("_pre_fold", None)
-            fold_res = self._fold_and_blobs(
-                affected_days, prune_convs=prune_convs,
-                delta_convs=delta_convs, first_run=False, metrics=metrics,
-            )
-            stage_sec["tier_fold"] = fold_res["fold_sec"]
-            stage_sec["blob_1m"] = fold_res["blob_1m_sec"]
-            mark("_fold_blob")
-            stage_sec["blobs"] = round(
-                stage_sec.pop("_fold_blob") - stage_sec["tier_fold"], 2
-            )
-        blob_bytes_written = fold_res["blob_bytes"]
-
-        shutil.rmtree(ingest_staging, ignore_errors=True)
+        shutil.rmtree(self._stage_dir("ingest"), ignore_errors=True)
         ckpt.update(last_snapshot_id=last, runs=ckpt["runs"] + 1)
         self._commit_checkpoint(ckpt)
+        if not days:
+            return {"status": "empty-delta", "turns": 0}
         wall = time.time() - t0
         result = {
             "status": "ok",
@@ -1145,14 +824,96 @@ class RollupPipeline:
             "turns": n_turns,
             "wall_sec": wall,
             "turns_per_sec": n_turns / wall,
-            "blob_bytes": int(blob_bytes_written),
+            "blob_bytes": blob_bytes,
             "last_snapshot_id": last,
-            "affected_days": len(affected_days),
+            "affected_days": len(days),
             "stage_sec": stage_sec,
-            "stage_bytes": self._stage_bytes(int(blob_bytes_written)),
+            "stage_bytes": self._stage_bytes(blob_bytes),
         }
         metrics.log("done", **{k: v for k, v in result.items() if k != "status"})
         return result
+
+    def _run_first(self, prep: _Prepared, stage, ingested) -> tuple:
+        """First run: with no history there is no anti-join
+        self-reference, so the turns-store write IS the materialization,
+        and the 1m tier rolls up from the same content-final frame
+        CONCURRENTLY — the write is IO-bound, the rollup CPU-bound, and
+        FAIR scheduling interleaves their tasks.  The store content IS
+        the prepared delta, so this is bit-identical to a rebuild from
+        the store, which would have to wait for the write.  The folds
+        and blobs chain behind the 1m merge in the same thread: they
+        depend only on the committed 1m tier, so they overlap the
+        write's tail too (measured at sf1.0: write 32 s, tier 19 s,
+        folds+blobs ~11 s).  Row counts come from the
+        write's observation, affected days from the partition dirs it
+        created (Iceberg: the commit's manifest statistics).
+
+        Returns ``(turns, affected days, blob bytes, encode branches)``."""
+
+        def write() -> tuple[list, int]:
+            with stage("prepare"):
+                return self._write_turns(prep.laid_out, self.turns_path)
+
+        def tiers() -> tuple[int, dict]:
+            with stage("tier_1m"):
+                upd = rollup_transcripts(
+                    prep.content.select("conv_id", "role", "tool", "ts", "text"),
+                    "1m",
+                ).withColumn("day", F.to_date("bucket"))
+                self._merge_partitions(upd, self.tier_path("1m"), "day")
+            # day = to_date(bucket) == to_date(ts): the tier's partition
+            # dirs hold the same day set the store write creates
+            days = [d for d, _ in _day_partitions(self.tier_path("1m"))]
+            return self._fold_and_blobs(days, True, stage) if days else (0, {})
+
+        # leaving the pool waits for both, also when one of them raised
+        with stage("overlap_wall"), ThreadPoolExecutor(2) as pool:
+            f_write, f_tiers = pool.submit(write), pool.submit(tiers)
+        counts, n_turns = f_write.result()
+        blob_bytes, branches = f_tiers.result()
+        ingested(counts, n_turns)
+        days = [d for d, _ in _day_partitions(self.turns_path)]
+        return n_turns, days, blob_bytes, branches
+
+    def _run_incremental(self, prep: _Prepared, stage, ingested) -> tuple:
+        """Incremental run: ``_prepare`` anti-joins the turns store, so
+        the prepared delta is materialized to immutable staging files
+        FIRST — once the store is appended to, a lazy recomputation of
+        the plan would see its own output and come out empty (on
+        Iceberg, snapshot isolation of the MERGE does this for free).
+        The staging is already day-partitioned and in final sort order,
+        so the append is a driver-side file move (Iceberg: a fast-append
+        commit), and exact post-anti-join row counts ride the staging
+        write.  A crash mid-move leaves a subset appended, healed by the
+        replay contract: dedup drops the moved rows and the affected-day
+        recompute rebuilds the tiers.
+
+        The 1m tier then RECOMPUTES the affected day partitions from the
+        authoritative turns store (a day-partition pruned scan that never
+        reads the text payload).  A full per-day recompute — rather than
+        merging delta partials into old cells — makes every run
+        idempotent: replaying the same snapshot (crash recovery,
+        duplicate batch) converges to the same tiers.
+
+        Returns ``(turns, affected days, blob bytes, encode branches)``."""
+        staging = self._stage_dir("ingest")
+        with stage("prepare"):
+            shutil.rmtree(staging, ignore_errors=True)
+            counts, n_turns = self._write_turns(prep.laid_out, staging)
+        if n_turns > 0:
+            self._move_staged_files(staging, self.turns_path)
+        ingested(counts, n_turns)
+        if not prep.days:
+            return n_turns, [], 0, {}
+        with stage("tier_1m"):
+            turns = self._day_filter("day", prep.days)(self._read_turns())
+            upd = rollup_transcripts(
+                turns.select("conv_id", "role", "tool", "ts", "text_len"),
+                "1m",
+                text_len_col="text_len",
+            ).withColumn("day", F.to_date("bucket"))
+            self._merge_partitions(upd, self.tier_path("1m"), "day")
+        return (n_turns, prep.days, *self._fold_and_blobs(prep.days, False, stage))
 
     def _stage_bytes(self, blob_bytes: int) -> dict:
         """Bytes-level audit of a run, from FILESYSTEM facts only (dir
@@ -1205,28 +966,13 @@ class RollupPipeline:
         partition lists and logs a retention metric."""
         self._require_utc_session()
 
-        def _day_dirs(root: str, prefix: str = "day="):
-            out = []
-            if not os.path.isdir(root):
-                return out
-            for sub in os.listdir(root):
-                if sub.startswith(prefix):
-                    try:
-                        out.append(
-                            (_dt.date.fromisoformat(sub[len(prefix):]), sub)
-                        )
-                    except ValueError:
-                        continue
-            return out
-
         if now is None:
-            newest = None
-            for tier in TIERS:
-                for d, _ in _day_dirs(self.tier_path(tier)):
-                    newest = d if newest is None or d > newest else newest
-            if newest is None:
+            now = max(
+                (d for t in TIERS for d, _ in _day_partitions(self.tier_path(t))),
+                default=None,
+            )
+            if now is None:
                 return {"status": "empty"}
-            now = newest
         elif hasattr(now, "date"):
             now = now.date()
 
@@ -1238,7 +984,7 @@ class RollupPipeline:
                 continue
             cutoff = now - _dt.timedelta(days=int(max_age))
             gone = []
-            for d, sub in _day_dirs(self.tier_path(tier)):
+            for d, sub in _day_partitions(self.tier_path(tier)):
                 if d < cutoff:
                     gone.append(str(d))
                     if not dry_run:
@@ -1253,7 +999,7 @@ class RollupPipeline:
             seg_unit = SEGMENT_TRUNC[tier]
             tier_dir = os.path.join(self.blobs_path, f"tier_part={tier}")
             partial: list = []
-            for d, sub in _day_dirs(tier_dir, prefix="seg_day="):
+            for d, sub in _day_partitions(tier_dir, prefix="seg_day="):
                 if seg_unit == "month":
                     nxt = (d.replace(day=1) + _dt.timedelta(days=32)).replace(
                         day=1
@@ -1287,8 +1033,7 @@ class RollupPipeline:
                         tier, day_cells
                     )
                     self._merge_partitions(
-                        blobs, self.blobs_path, ["tier_part", "seg_day"],
-                        "retention-reencode",
+                        blobs, self.blobs_path, ["tier_part", "seg_day"]
                     )
         metrics = MetricsLog(os.path.join(self.out, "metrics.jsonl"), new_job_id())
         metrics.log(
