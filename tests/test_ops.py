@@ -427,6 +427,56 @@ def test_neardup_clusters_on_lsh_pairs(spark):
     assert (members.index == members.values).all()
 
 
+def test_embedding_neardup_counts_rows_when_footer_read_fails(
+    spark, monkeypatch, tmp_path
+):
+    """The IVF cell count comes from the parquet footers; when reading
+    them fails with a storage error the query counts the rows with
+    Spark instead and returns the same pairs.  Any other error raises."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tsforge_spark.catalog_docs import q_embedding_neardup
+
+    n_rows = 300
+    vecs = np.random.default_rng(3).normal(size=(n_rows, 8)).astype(np.float32)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": np.arange(n_rows, dtype=np.int64),
+                "embedding": pa.array(list(vecs), pa.list_(pa.float32())),
+            }
+        ),
+        tmp_path / "embeddings.parquet",
+    )
+    sf = str(tmp_path)
+    want = sorted(q_embedding_neardup(spark, sf).collect())
+    assert want
+
+    def unreadable(*_a, **_k):
+        raise OSError("footer unreadable")
+
+    counted = []
+    frame_type = type(spark.range(1))
+    spark_count = frame_type.count
+
+    def count(df):
+        counted.append(spark_count(df))
+        return counted[-1]
+
+    monkeypatch.setattr(pq, "ParquetDataset", unreadable)
+    monkeypatch.setattr(frame_type, "count", count)
+    assert sorted(q_embedding_neardup(spark, sf).collect()) == want
+    assert counted == [n_rows]
+
+    def broken(*_a, **_k):
+        raise RuntimeError("not a storage error")
+
+    monkeypatch.setattr(pq, "ParquetDataset", broken)
+    with pytest.raises(RuntimeError, match="not a storage error"):
+        q_embedding_neardup(spark, sf)
+
+
 def test_two_level_ivf_assignment(spark):
     """Coarse-to-fine assignment (similarity.assign_cells_two_level):
     on cluster-structured data where each coarse group is well

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from tsforge_spark.codec.blobs import decode_blobs, encode_tier_blobs
 from tsforge_spark.fixtures import make_late_batch, make_transcripts, transcripts_to_spark
 from tsforge_spark.operators.rollup import rollup_transcripts
+from tsforge_spark.plans import pipeline as pipeline_module
 from tsforge_spark.plans.pipeline import RollupPipeline
 from tsforge_spark.sources.snapshots import SnapshotStore
 
@@ -76,13 +77,7 @@ def test_full_run_and_incremental_refold(spark, base_pdf, tmp_path):
 
     # incremental result must equal a full recompute on all data
     all_pdf = pd.concat([base_pdf, late], ignore_index=True)
-    full = RollupPipeline(
-        spark,
-        store,
-        str(tmp_path / "out_full"),
-        n_buckets=8,
-        dedup_against_history=False,
-    )
+    full = RollupPipeline(spark, store, str(tmp_path / "out_full"), n_buckets=8)
     # full pipeline consumes the same two snapshots in one go
     rf = full.run()
     assert rf["turns"] == len(all_pdf)
@@ -151,10 +146,7 @@ def test_crash_recovery_heals_tiers(spark, tmp_path):
     assert r["turns"] == 0  # everything was already appended
 
     all_pdf = pd.concat([base, late], ignore_index=True)
-    full = RollupPipeline(
-        spark, store, str(tmp_path / "out_full"), n_buckets=8,
-        dedup_against_history=False,
-    )
+    full = RollupPipeline(spark, store, str(tmp_path / "out_full"), n_buckets=8)
     full.run()
     for tier in ("1m", "1h", "1d"):
         inc = _tier_norm(pipe.read_tier(tier).toPandas())
@@ -257,10 +249,10 @@ def test_late_turn_in_prior_month_heals_blob_segment(spark, tmp_path):
     assert jan.count() > 0
 
 
-def test_backfill_day_join_path_matches_literals(spark, tmp_path):
+def test_backfill_day_join_path_matches_literals(spark, tmp_path, monkeypatch):
     """The broadcast semi-join day filter (the >200-affected-days
     backfill path) must produce the same tiers as the literal-isin path
-    — forced via day_literal_limit=0."""
+    — forced via DAY_LITERAL_LIMIT=0."""
     from tsforge_spark.fixtures import make_transcripts, make_late_batch, transcripts_to_spark
 
     base = make_transcripts(n_convs=25, seed=51)
@@ -268,11 +260,11 @@ def test_backfill_day_join_path_matches_literals(spark, tmp_path):
 
     outs = {}
     for name, limit in (("literal", 200), ("join", 0)):
+        monkeypatch.setattr(pipeline_module, "DAY_LITERAL_LIMIT", limit)
         store = SnapshotStore(str(tmp_path / f"store_{name}"))
         store.append(transcripts_to_spark(spark, base))
         pipe = RollupPipeline(
-            spark, store, str(tmp_path / f"out_{name}"), n_buckets=4,
-            day_literal_limit=limit,
+            spark, store, str(tmp_path / f"out_{name}"), n_buckets=4
         )
         assert pipe.run()["status"] == "ok"
         store.append(transcripts_to_spark(spark, late))
@@ -541,10 +533,7 @@ def test_interrupted_blob_swap_heals_and_keeps_carried_blobs(
         s.startswith(".trash_") for s in os.listdir(tier_dir)
     )
 
-    full = RollupPipeline(
-        spark, store, str(tmp_path / "out_full"), n_buckets=8,
-        dedup_against_history=False,
-    )
+    full = RollupPipeline(spark, store, str(tmp_path / "out_full"), n_buckets=8)
     full.run()
     for tier in ("1m", "1h", "1d"):
         inc = (
@@ -572,3 +561,50 @@ def test_interrupted_blob_swap_heals_and_keeps_carried_blobs(
         s.startswith(".trash_") for s in os.listdir(tier_dir)
     )
     assert os.path.isdir(src)
+
+
+def test_interrupted_retention_swap_heals_on_next_retention(spark, tmp_path):
+    """A crash between the two renames of a retention re-encode's swap
+    leaves the partially expired segment's pre-retention bytes under
+    ``.trash_<sub>`` with the live dir missing.  The next
+    ``enforce_retention`` must restore it before it lists the tier's
+    segments, so it re-encodes the segment from the surviving tier rows
+    again and the decoded 1h blobs equal the 1h tier."""
+    import os
+    import shutil
+
+    base = make_transcripts(n_convs=20, seed=71, span_days=14)
+    store = SnapshotStore(str(tmp_path / "store"))
+    store.append(transcripts_to_spark(spark, base))
+    pipe = RollupPipeline(spark, store, str(tmp_path / "out"), n_buckets=4)
+    assert pipe.run()["status"] == "ok"
+
+    policy = {"1h": 7}
+    tier_dir = os.path.join(pipe.blobs_path, "tier_part=1h")
+    stale = str(tmp_path / "stale")
+    shutil.copytree(tier_dir, stale)  # the pre-retention segments
+    res = pipe.enforce_retention(policy)
+    assert res["reencoded"]["1h"], res
+    victim = f"seg_day={res['reencoded']['1h'][0]}"
+
+    # simulate the crash: the old partition renamed to trash, the
+    # re-encoded one never installed
+    shutil.rmtree(os.path.join(tier_dir, victim))
+    shutil.copytree(
+        os.path.join(stale, victim), os.path.join(tier_dir, f".trash_{victim}")
+    )
+
+    again = pipe.enforce_retention(policy)
+    assert again["reencoded"]["1h"] == res["reencoded"]["1h"], again
+    assert os.path.isdir(os.path.join(tier_dir, victim))
+    assert not any(s.startswith(".trash_") for s in os.listdir(tier_dir))
+    tier = _tier_norm(pipe.read_tier("1h").toPandas())
+    dec = (
+        pipe.decoded_series("1h")
+        .filter(F.col("measure") == "turns")
+        .toPandas()
+        .sort_values(["conv_id", "bucket"])
+        .reset_index(drop=True)
+    )
+    assert len(dec) == len(tier)
+    assert (dec["value"].to_numpy() == tier["turns"].to_numpy()).all()

@@ -313,3 +313,6 @@ def test_warm_start_runs_and_returns_duration(spark):
     dt = warm_start(spark, tiny_parquet=f"{SF}/region.parquet")
     assert isinstance(dt, float) and dt >= 0.0
     assert spark.range(3).count() == 3
+    # a missing warm-up file is tolerated
+    dt = warm_start(spark, tiny_parquet=f"{SF}/no_such_table.parquet")
+    assert isinstance(dt, float) and dt >= 0.0

@@ -221,8 +221,7 @@ def test_old_layout_store_refused_then_migrated(spark, tmp_path):
     all_pdf = pd.concat([base, late], ignore_index=True)
     assert pipe.verify_text_equality(transcripts_to_spark(spark, all_pdf)) == 0
     full = RollupPipeline(
-        spark, store, str(tmp_path / "out_full"), n_buckets=N_BUCKETS,
-        dedup_against_history=False,
+        spark, store, str(tmp_path / "out_full"), n_buckets=N_BUCKETS
     )
     full.run()
     for tier in ("1m", "1h", "1d"):

@@ -187,15 +187,16 @@ def q_embedding_neardup(spark, sf_dir):
     # n from the parquet FOOTER (Iceberg: the snapshot's manifest row
     # count) — the sqrt-k sizing needs only the table cardinality, and
     # a full count() action here was a whole extra Spark job.  The
-    # driver-local footer read only works for filesystem paths, so any
-    # failure (s3/hdfs sf_dir, layout change) falls back to e.count()
-    # — correct everywhere, one extra job.
-    try:
-        import pyarrow.parquet as _pq
+    # driver-local footer read only works for local filesystem paths,
+    # so a storage error (s3/hdfs sf_dir, unreadable footer) falls back
+    # to e.count() — correct everywhere, one extra job.
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
 
+    try:
         files = _pq.ParquetDataset(f"{sf_dir}/embeddings.parquet").files
         n = sum(_pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
+    except (OSError, _pa.ArrowException):
         n = e.count()
     k = max(16, math.ceil(math.sqrt(n)))
     cents = e.filter(F.col("vec_id") < k).select(

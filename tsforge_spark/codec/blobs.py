@@ -28,6 +28,9 @@ from tsforge_spark.codec.gorilla import decode_blobs_many, encode_blobs_batch
 
 SEGMENT_TRUNC = {"1m": "day", "1h": "month", "1d": "month"}
 
+# the tier columns every blob row encodes, one blob per measure
+MEASURES = ("turns", "tool_calls")
+
 # decode-kernel sub-batch cap (bytes of blob payload per
 # decode_blobs_many call) — see _decode_frames.  It also bounds a
 # driver-side read: read_series decodes on the driver only when the
@@ -117,10 +120,8 @@ def encodes_on_driver(spark, cells_hint: int | None) -> bool:
 _BLOB_COLS = [f.name for f in BLOB_SCHEMA]
 
 
-def _encode_frame(
-    pdf: pd.DataFrame, tier: str, measures: tuple[str, ...]
-) -> pd.DataFrame:
-    """Tier cells (``conv_id``, ``bucket``, ``segment``, ``<measures>``)
+def _encode_frame(pdf: pd.DataFrame, tier: str) -> pd.DataFrame:
+    """Tier cells (``conv_id``, ``bucket``, ``segment``, ``MEASURES``)
     → blob rows.  The encode body of both ``encode_tier_blobs``
     branches."""
     if len(pdf) == 0:
@@ -135,7 +136,7 @@ def _encode_frame(
     change[1:] = (conv_all[1:] != conv_all[:-1]) | (seg_all[1:] != seg_all[:-1])
     starts = np.flatnonzero(change)
     ends = np.append(starts[1:], len(pdf))
-    vals_by_m = {m: pdf[m].to_numpy(dtype=np.float64) for m in measures}
+    vals_by_m = {m: pdf[m].to_numpy(dtype=np.float64) for m in MEASURES}
     # ONE vectorized pass encodes every chunk in the batch (timestamp
     # streams shared across measures); per-blob work is just a header
     # pack + slices — tier cells at coarse grains average a handful of
@@ -147,18 +148,14 @@ def _encode_frame(
     rows = []
     for j in range(len(starts)):
         n = int(n_pts[j])
-        for m in measures:
+        for m in MEASURES:
             blob = blob_lists[m][j]
             rows.append((conv_b[j], seg_b[j], tier, m, n, n * 16, len(blob), blob))
     return pd.DataFrame(rows, columns=_BLOB_COLS)
 
 
 def encode_tier_blobs(
-    tier_df: DataFrame,
-    tier: str,
-    measures: tuple[str, ...] = ("turns", "tool_calls"),
-    n_buckets: int | None = None,
-    cells_hint: int | None = None,
+    tier_df: DataFrame, tier: str, cells_hint: int | None = None
 ) -> DataFrame:
     """Encode tier cells into per-(conv, segment, measure) blobs.
 
@@ -179,8 +176,8 @@ def encode_tier_blobs(
     - **Spark**, otherwise: ``groupBy(_enc_bucket).applyInPandas``.
       Grouping by (conv, segment) directly would create one Arrow batch
       per blob — millions of tiny groups whose per-group overhead
-      dwarfs the encode — so rows group by a hash bucket (~``n_buckets``
-      large groups; the hint also caps cells per group, see
+      dwarfs the encode — so rows group by a hash bucket (a few large
+      groups per core; the hint also caps cells per group, see
       ``_default_n_buckets``), sort inside the kernel and split on
       (conv, segment) boundaries with numpy: the inner loop runs once
       per *blob*, never per row.  Bucketing also bounds task skew: a hot
@@ -190,25 +187,24 @@ def encode_tier_blobs(
     spark = tier_df.sparkSession
     segment = F.date_trunc(SEGMENT_TRUNC[tier], F.col("bucket")).alias("segment")
     if encodes_on_driver(spark, cells_hint):
-        pdf = tier_df.select("conv_id", "bucket", *measures, segment).toPandas()
-        out = _encode_frame(pdf, tier, measures)
+        pdf = tier_df.select("conv_id", "bucket", *MEASURES, segment).toPandas()
+        out = _encode_frame(pdf, tier)
         return spark.createDataFrame(out, BLOB_SCHEMA).coalesce(1)
 
-    if n_buckets is None:
-        n_buckets = _default_n_buckets(
-            spark.sparkContext.defaultParallelism, cells_hint
-        )
+    n_buckets = _default_n_buckets(
+        spark.sparkContext.defaultParallelism, cells_hint
+    )
     with_seg = tier_df.select(
         "conv_id",
         "bucket",
-        *measures,
+        *MEASURES,
         segment,
         F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))
         .cast("int")
         .alias("_enc_bucket"),
     )  # narrow projection: only these columns cross the Arrow boundary
     return with_seg.groupBy("_enc_bucket").applyInPandas(
-        lambda pdf: _encode_frame(pdf, tier, measures), schema=BLOB_SCHEMA
+        lambda pdf: _encode_frame(pdf, tier), schema=BLOB_SCHEMA
     )
 
 

@@ -59,10 +59,6 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     satisfies the next groupBy/window's clustering (no second
     shuffle)."""
     sc = df.sparkSession.sparkContext
-    try:
-        n_parts = df.rdd.getNumPartitions()
-    except Exception:  # noqa: BLE001 — conversion failure = no opinion
-        return df
-    if n_parts * 2 <= sc.defaultParallelism:
+    if df.rdd.getNumPartitions() * 2 <= sc.defaultParallelism:
         return kernel_repartition(df, *key_cols)
     return df

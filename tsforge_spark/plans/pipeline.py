@@ -34,9 +34,10 @@ tests/test_pipeline.py::test_crash_recovery_heals_tiers.  The checkpoint
 only advances after all stages commit.
 
 Scale notes: all tier stores are partitioned by event day so incremental
-runs prune at the directory level; merges stage to a scratch dir then
-dynamic-overwrite only touched partitions (on Iceberg this whole dance is
-one ``MERGE INTO`` with snapshot isolation).  The per-group encode kernel
+runs prune at the directory level; tier merges dynamic-overwrite only
+touched partitions, and blob commits stage to a scratch dir then swap
+touched partitions in by rename (on Iceberg this whole dance is one
+``MERGE INTO`` with snapshot isolation).  The per-group encode kernel
 is bounded by segment size, so hot conversations cannot straggle (see
 codec/blobs.py).
 """
@@ -65,6 +66,10 @@ from tsforge_spark.schema import TIER_READ_SCHEMA, TURNS_READ_SCHEMA
 from tsforge_spark.sources.snapshots import SnapshotStore
 
 TIERS = ["1m", "1h", "1d"]
+
+# affected-day lists up to this long filter partitions by literals;
+# longer ones by a broadcast semi-join (``RollupPipeline._day_filter``)
+DAY_LITERAL_LIMIT = 200
 
 
 def _segment_start(d: _dt.date, unit: str) -> _dt.datetime:
@@ -110,7 +115,11 @@ class RollupPipeline:
     ``tier_fold``, ``blobs``, ``done``) and ingest lineage rows.
     ``enforce_retention`` expires old tier days and blob segments,
     ``compact_turns`` rewrites the turns store, and ``read_tier``,
-    ``read_blobs`` and ``decoded_series`` serve the outputs."""
+    ``read_blobs`` and ``decoded_series`` serve the outputs.
+
+    Three options: ``n_buckets`` (the turns store's hash buckets),
+    ``history_dedup_scope`` and ``unique_key_check`` (see
+    ``__init__``)."""
 
     def __init__(
         self,
@@ -118,15 +127,13 @@ class RollupPipeline:
         store: SnapshotStore,
         out_dir: str,
         n_buckets: int = 32,
-        measures: tuple[str, ...] = ("turns", "tool_calls"),
-        dedup_against_history: bool = True,
-        hot_threshold: int = 100_000,
-        hot_block_size: int = 50_000,
-        day_literal_limit: int = 200,
         history_dedup_scope: str = "affected-days",
         unique_key_check: str = "probe",
     ):
-        """``unique_key_check`` controls in-delta dedup verification:
+        """``n_buckets`` is the number of ``xxhash64(conv_id)`` buckets
+        of the turns-store layout and of its lineage rows.
+
+        ``unique_key_check`` controls in-delta dedup verification:
 
         - ``"probe"`` (default): verify (conv_id, turn_idx) uniqueness
           with a key-hash probe every run; violations trigger a
@@ -158,11 +165,6 @@ class RollupPipeline:
         self.store = store
         self.out = out_dir
         self.n_buckets = n_buckets
-        self.measures = measures
-        self.dedup_against_history = dedup_against_history
-        self.hot_threshold = hot_threshold
-        self.hot_block_size = hot_block_size
-        self.day_literal_limit = day_literal_limit
         if history_dedup_scope not in ("affected-days", "full"):
             raise ValueError(
                 "history_dedup_scope must be 'affected-days' or 'full'"
@@ -285,7 +287,7 @@ class RollupPipeline:
         planning time); a months-long backfill would put thousands of
         literals in the plan, so large lists become a broadcast semi-join
         against a days dim (dynamic partition pruning)."""
-        if len(days) <= self.day_literal_limit:
+        if len(days) <= DAY_LITERAL_LIMIT:
             return lambda df: df.filter(F.col(col_name).isin(days))
         dim = F.broadcast(
             self.spark.createDataFrame([(d,) for d in days], "_aff_day date")
@@ -336,9 +338,7 @@ class RollupPipeline:
 
         def _hot_probe() -> list:
             # the hot set is small by definition, so the collect is too
-            return [
-                r[0] for r in hot_keys(clean, "conv_id", self.hot_threshold).collect()
-            ]
+            return [r[0] for r in hot_keys(clean, "conv_id").collect()]
 
         def _days_probe() -> list:
             # map-side distinct to a handful of day rows
@@ -377,7 +377,7 @@ class RollupPipeline:
         if has_dups:
             clean = clean.dropDuplicates(["conv_id", "turn_idx"])
         existing = self._read_if_exists(self.turns_path)
-        if self.dedup_against_history and existing is not None:
+        if existing is not None:
             # exactly-once ingest: drop turns already processed.  The
             # turns store is day-partitioned; under the ts-immutability
             # contract (see __init__: history_dedup_scope) only the
@@ -413,8 +413,6 @@ class RollupPipeline:
             key="conv_id",
             order_col="turn_idx",
             n_buckets=self.n_buckets,
-            hot_threshold=self.hot_threshold,
-            block_size=self.hot_block_size,
             hot_ids=hot_ids,
             # day joins the exchange key: ~days× more distinct
             # partition values over the same partition count evens the
@@ -427,16 +425,15 @@ class RollupPipeline:
     def _stage_dir(self, name: str) -> str:
         return os.path.join(self.out, "_staging", name)
 
-    def _merge_partitions(
-        self, new_df: DataFrame, target: str, partition_cols
-    ) -> None:
-        """Dynamic-overwrite only the partitions present in ``new_df``
-        (Iceberg: MERGE INTO).  A direct write is safe because no tier or
-        blob merge reads its own target (tiers derive from the turns
-        store / the finer tier; blobs derive from tier stores) — the only
-        self-referential write in the pipeline is the ingest anti-join,
-        which keeps its explicit staging materialization in
-        ``_run_incremental``.
+    def _merge_partitions(self, new_df: DataFrame, target: str) -> None:
+        """Dynamic-overwrite only the ``day`` partitions present in
+        ``new_df`` (Iceberg: MERGE INTO): the tier commits.  A direct
+        write is safe because no tier merge reads its own target (the 1m
+        tier derives from the turns store, 1h and 1d from the finer
+        tier) — the only self-referential write in the pipeline is the
+        ingest anti-join, which keeps its explicit staging
+        materialization in ``_run_incremental``.  Blob commits go
+        through ``_encode_and_commit_blobs`` instead.
 
         Crash semantics: new files land under the job's temporary dir and
         partition replacement happens at job commit, so a crash mid-write
@@ -444,11 +441,7 @@ class RollupPipeline:
         subset replaced — both are healed by the replay contract (the
         checkpoint only advances after all stages commit, and every stage
         is a full recompute of the affected day partitions)."""
-        if isinstance(partition_cols, str):
-            partition_cols = [partition_cols]
-        new_df.write.mode("overwrite").partitionBy(*partition_cols).parquet(
-            target
-        )
+        new_df.write.mode("overwrite").partitionBy("day").parquet(target)
 
     def _write_turns(self, prepared: DataFrame, path: str) -> tuple[list, int]:
         """Write the laid-out turns ``partitionBy("day")`` to ``path`` and
@@ -588,15 +581,15 @@ class RollupPipeline:
                     time.sleep(0.05 * (attempt + 1))
             shutil.rmtree(trash, ignore_errors=True)
 
-    def _day_cells(self, tier: str, segments) -> dict:
-        """``{day: cells}`` for the ``day=`` partitions of ``tier`` that
-        hold cells of the segments starting at ``segments`` (for a month
-        segment, every day of the month), counted from the parquet
-        footers — driver-side metadata only, no Spark job (Iceberg:
-        manifest stats)."""
+    def _day_cells(self, tier: str, days) -> dict:
+        """``{day: cells}`` for the ``day=`` partitions of ``tier`` in
+        the segments holding ``days`` (for a month segment, every day of
+        the month), counted from the parquet footers — driver-side
+        metadata only, no Spark job (Iceberg: manifest stats)."""
         import pyarrow.parquet as pq
 
-        unit, want = SEGMENT_TRUNC[tier], set(segments)
+        unit = SEGMENT_TRUNC[tier]
+        want = {_segment_start(d, unit) for d in days}
         out = {}
         for day, sub in _day_partitions(self.tier_path(tier)):
             if _segment_start(day, unit) not in want:
@@ -609,34 +602,15 @@ class RollupPipeline:
             )
         return out
 
-    def _encode_segments(
-        self, tier: str, day_cells: dict
-    ) -> tuple[DataFrame, str]:
-        """Blob rows, with their store partition columns, of the
-        ``tier`` cells in the day partitions of ``day_cells`` (whole
-        segments, as ``_day_cells`` lists them), and the encode branch
-        taken.  The footer count bounds the slice, so one that fits an
-        Arrow batch encodes on the driver (``encode_tier_blobs``)."""
-        cells = self._day_filter("day", sorted(day_cells))(self._read_tier(tier))
-        hint = sum(day_cells.values())
-        blobs = encode_tier_blobs(
-            cells.drop("day"), tier, self.measures, cells_hint=hint
-        )
-        branch = "driver" if encodes_on_driver(self.spark, hint) else "spark"
-        return (
-            blobs.withColumn("seg_day", F.to_date("segment")).withColumn(
-                "tier_part", F.lit(tier)
-            ),
-            branch,
-        )
-
     def _encode_and_commit_blobs(
-        self, tiers: list, staging_name: str, affected_days, branches: dict
+        self, tier_cells: dict, staging_name: str, branches: dict
     ) -> int:
-        """Re-encode every blob chunk (whole segments, every
-        conversation) of ``tiers`` that holds an affected day, and commit
-        them.  Returns bytes written this call and records each tier's
-        encode branch in ``branches``.
+        """Re-encode the blob chunks (whole segments, every conversation)
+        of ``tier_cells`` — ``{tier: day_cells}``, as ``_day_cells``
+        lists them — and commit them: the one commit path into the blob
+        store, for ``run()`` and ``enforce_retention`` alike.  Returns
+        bytes written this call and records each tier's encode branch in
+        ``branches``.
 
         All tiers in the group union into ONE write job (fewer
         fixed-cost job launches).  Each tier's slice is bounded by the
@@ -660,16 +634,22 @@ class RollupPipeline:
           under ``.trash_<sub>``, which ``_heal_interrupted_swaps``
           restores before the next swap or serving read, so readers
           never see a missing partition between the crash and the
-          replay that re-encodes it."""
+          replay that re-encodes it (for a retention re-encode, the
+          next ``enforce_retention``, which heals each tier before it
+          lists its segments)."""
         from pyspark.sql import Observation
 
         all_blobs = None
-        for tier in tiers:
-            segments = {
-                _segment_start(d, SEGMENT_TRUNC[tier]) for d in affected_days
-            }
-            blobs, branches[tier] = self._encode_segments(
-                tier, self._day_cells(tier, segments)
+        for tier, day_cells in tier_cells.items():
+            cells = self._day_filter("day", sorted(day_cells))(self._read_tier(tier))
+            hint = sum(day_cells.values())
+            branches[tier] = (
+                "driver" if encodes_on_driver(self.spark, hint) else "spark"
+            )
+            blobs = (
+                encode_tier_blobs(cells.drop("day"), tier, cells_hint=hint)
+                .withColumn("seg_day", F.to_date("segment"))
+                .withColumn("tier_part", F.lit(tier))
             )
             all_blobs = blobs if all_blobs is None else all_blobs.unionByName(blobs)
         obs_blobs = Observation()
@@ -681,7 +661,7 @@ class RollupPipeline:
         all_blobs.write.mode("overwrite").partitionBy(
             "tier_part", "seg_day"
         ).parquet(blob_staging)
-        for tier in tiers:
+        for tier in tier_cells:
             self._replace_partitions_by_move(
                 os.path.join(blob_staging, f"tier_part={tier}"),
                 os.path.join(self.blobs_path, f"tier_part={tier}"),
@@ -724,7 +704,9 @@ class RollupPipeline:
 
         def blobs(tiers: list, name: str) -> int:
             return self._encode_and_commit_blobs(
-                tiers, f"blobs_{name}", affected_days, branches
+                {t: self._day_cells(t, affected_days) for t in tiers},
+                f"blobs_{name}",
+                branches,
             )
 
         def blobs_1m() -> int:
@@ -740,7 +722,7 @@ class RollupPipeline:
                     upd = fold_tier(
                         day_filter(self._read_tier(finer)).drop("day"), tier
                     ).withColumn("day", F.to_date("bucket"))
-                    self._merge_partitions(upd, self.tier_path(tier), "day")
+                    self._merge_partitions(upd, self.tier_path(tier))
                     if tier == "1h" and fine_split:
                         pending.append(pool.submit(blobs, ["1h"], "1h"))
             with stage("blobs"):
@@ -860,7 +842,7 @@ class RollupPipeline:
                     prep.content.select("conv_id", "role", "tool", "ts", "text"),
                     "1m",
                 ).withColumn("day", F.to_date("bucket"))
-                self._merge_partitions(upd, self.tier_path("1m"), "day")
+                self._merge_partitions(upd, self.tier_path("1m"))
             # day = to_date(bucket) == to_date(ts): the tier's partition
             # dirs hold the same day set the store write creates
             days = [d for d, _ in _day_partitions(self.tier_path("1m"))]
@@ -912,7 +894,7 @@ class RollupPipeline:
                 "1m",
                 text_len_col="text_len",
             ).withColumn("day", F.to_date("bucket"))
-            self._merge_partitions(upd, self.tier_path("1m"), "day")
+            self._merge_partitions(upd, self.tier_path("1m"))
         return (n_turns, prep.days, *self._fold_and_blobs(prep.days, False, stage))
 
     def _stage_bytes(self, blob_bytes: int) -> dict:
@@ -961,9 +943,12 @@ class RollupPipeline:
         day < cutoff`` + snapshot expiry — a metadata-only operation, no
         data scan).  Blob segments expire only when the WHOLE segment is
         older than the cutoff (a month chunk holding any retained day
-        survives).  ``now`` defaults to the newest day across tiers
-        (data-relative, deterministic); returns per-tier deleted
-        partition lists and logs a retention metric."""
+        survives); partially expired segments are re-encoded from the
+        surviving tier rows, every tier in one write, and commit through
+        ``_encode_and_commit_blobs`` like a run's.  ``now`` defaults to
+        the newest day across tiers (data-relative, deterministic);
+        returns per-tier deleted partition lists and logs a retention
+        metric."""
         self._require_utc_session()
 
         if now is None:
@@ -978,7 +963,7 @@ class RollupPipeline:
 
         deleted: dict = {}
         reencoded: dict = {}
-        branches: dict = {}
+        tier_cells: dict = {}
         for tier, max_age in policy.items():
             if max_age is None:
                 continue
@@ -991,50 +976,38 @@ class RollupPipeline:
                         shutil.rmtree(
                             os.path.join(self.tier_path(tier), sub)
                         )
-            # blob segments: drop fully-expired chunks; RE-ENCODE
-            # partially-expired ones from the surviving tier rows so the
+            # blob segments starting before the cutoff: those that still
+            # hold surviving tier rows are RE-ENCODED from them, so the
             # blob serving path never trails the tier tables (a month
             # chunk straddling the cutoff would otherwise still serve
-            # days the tier just dropped)
-            seg_unit = SEGMENT_TRUNC[tier]
+            # days the tier just dropped); the rest are dropped.  A
+            # segment whose swap a crash interrupted is restored first,
+            # so it is listed like the others.
             tier_dir = os.path.join(self.blobs_path, f"tier_part={tier}")
-            partial: list = []
-            for d, sub in _day_partitions(tier_dir, prefix="seg_day="):
-                if seg_unit == "month":
-                    nxt = (d.replace(day=1) + _dt.timedelta(days=32)).replace(
-                        day=1
-                    )
-                    seg_end = nxt - _dt.timedelta(days=1)
-                else:
-                    seg_end = d
-                if seg_end < cutoff:
+            self._heal_interrupted_swaps(tier_dir)
+            old = [
+                (d, sub)
+                for d, sub in _day_partitions(tier_dir, prefix="seg_day=")
+                if d < cutoff
+            ]
+            live = {
+                d: n
+                for d, n in self._day_cells(tier, [d for d, _ in old]).items()
+                if d >= cutoff and n
+            }
+            kept = {_segment_start(d, SEGMENT_TRUNC[tier]).date() for d in live}
+            reencoded[tier] = [str(d) for d, _ in old if d in kept]
+            for d, sub in old:
+                if d not in kept:
                     gone.append(f"blob:{d}")
                     if not dry_run:
                         shutil.rmtree(os.path.join(tier_dir, sub))
-                elif d < cutoff:
-                    partial.append(_dt.datetime(d.year, d.month, d.day))
             deleted[tier] = gone
-            reencoded[tier] = [str(p.date()) for p in partial]
-            if partial and not dry_run:
-                day_cells = self._day_cells(tier, partial)
-                # a partial segment with NO surviving tier rows would be
-                # untouched by the dynamic overwrite — drop it outright
-                have = {
-                    _segment_start(d, seg_unit)
-                    for d, n in day_cells.items() if n
-                }
-                for p in [p for p in partial if p not in have]:
-                    partial.remove(p)
-                    reencoded[tier].remove(str(p.date()))
-                    deleted[tier].append(f"blob:{p.date()}")
-                    shutil.rmtree(os.path.join(tier_dir, f"seg_day={p.date()}"))
-                if partial:
-                    blobs, branches[tier] = self._encode_segments(
-                        tier, day_cells
-                    )
-                    self._merge_partitions(
-                        blobs, self.blobs_path, ["tier_part", "seg_day"]
-                    )
+            if live and not dry_run:
+                tier_cells[tier] = live
+        branches: dict = {}
+        if tier_cells:
+            self._encode_and_commit_blobs(tier_cells, "blobs_retention", branches)
         metrics = MetricsLog(os.path.join(self.out, "metrics.jsonl"), new_job_id())
         metrics.log(
             "retention",

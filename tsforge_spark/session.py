@@ -121,15 +121,17 @@ def warm_start(spark: SparkSession, tiny_parquet: str | None = None) -> float:
         F.count(F.lit(1)), F.sum("id"), F.min("id"), F.max("id")
     ).count()
     if tiny_parquet:
-        # Attempt the read and tolerate failure rather than pre-checking
-        # with os.path.exists: the pre-check is driver-LOCAL-filesystem
-        # only, so on s3/hdfs paths it silently skipped the parquet
-        # warm and the first real scan still paid reader init (r7
-        # verdict #6).  Best-effort by design — warm-up must never fail
-        # startup — but a miss is now the storage layer's verdict, not
-        # a wrong-filesystem assumption.
+        # Attempt the read and tolerate a missing path rather than
+        # pre-checking with os.path.exists: the pre-check is
+        # driver-LOCAL-filesystem only, so on s3/hdfs paths it silently
+        # skipped the parquet warm and the first real scan still paid
+        # reader init (r7 verdict #6).  A missing path is the storage
+        # layer's verdict; any other failure raises.
+        from pyspark.errors import AnalysisException
+
         try:
             spark.read.parquet(tiny_parquet).count()
-        except Exception:  # noqa: BLE001 — warm-up is best-effort
-            pass
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
     return _time.time() - t0
