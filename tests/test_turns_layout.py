@@ -69,6 +69,17 @@ def _order_problems(turns_path: str) -> list[str]:
     return problems
 
 
+def _unverified_files(turns_path: str) -> list[str]:
+    """Store files without the ``.<name>.crc`` sidecar that Hadoop's
+    checksummed local filesystem verifies every read against."""
+    return sorted(
+        f"{os.path.basename(root)}/{f}"
+        for root, _dirs, files in os.walk(turns_path)
+        for f in files
+        if f.endswith(".parquet") and f".{f}.crc" not in files
+    )
+
+
 def _bucket_rows(spark, turns_path: str) -> dict[int, int]:
     return {
         r["bucket_id"]: r["count"]
@@ -139,6 +150,7 @@ def runs(spark, tmp_path_factory):
             "turns": res["turns"],
             "layout": _layout_problems(pipe.turns_path),
             "order": _order_problems(pipe.turns_path),
+            "unverified": _unverified_files(pipe.turns_path),
             "added": {b: n for b, n in added.items() if n},
             "lineage": {
                 r["bucket_id"]: r["row_count"] for r in lin.collect()
@@ -159,6 +171,13 @@ def test_turns_store_has_only_day_directories(runs, stage):
 @pytest.mark.parametrize("stage", STAGES)
 def test_turns_files_hold_contiguous_ordered_conversations(runs, stage):
     assert runs[stage]["order"] == []
+
+
+@pytest.mark.parametrize("stage", STAGES)
+def test_turns_files_keep_checksum_sidecars(runs, stage):
+    # an incremental run appends staged files by rename: each must take
+    # its .crc along, or every later read of it goes unverified
+    assert runs[stage]["unverified"] == []
 
 
 @pytest.mark.parametrize("stage", STAGES)

@@ -469,9 +469,10 @@ class RollupPipeline:
 
     def _move_staged_files(self, staging: str, target: str) -> int:
         """Append staged day-partitioned files to ``target`` by moving
-        them (same filesystem → rename).  File names carry Spark's
-        per-job UUID, so collisions with existing store files cannot
-        occur.  Returns the number of files moved."""
+        them (same filesystem → rename), each with its ``.<name>.crc``
+        checksum sidecar so later reads stay verified.  File names carry
+        Spark's per-job UUID, so collisions with existing store files
+        cannot occur.  Returns the number of data files moved."""
         moved = 0
         for sub in os.listdir(staging):
             if not sub.startswith("day="):
@@ -481,9 +482,11 @@ class RollupPipeline:
             os.makedirs(dst_dir, exist_ok=True)
             for f in os.listdir(root):
                 if f.endswith(".parquet"):
-                    os.replace(
-                        os.path.join(root, f), os.path.join(dst_dir, f)
-                    )
+                    for name in (f, f".{f}.crc"):
+                        if os.path.exists(os.path.join(root, name)):
+                            os.replace(
+                                os.path.join(root, name), os.path.join(dst_dir, name)
+                            )
                     moved += 1
         return moved
 
