@@ -181,11 +181,11 @@ def test_small_incremental_run_job_count(built):
     """An 80-turn one-day incremental run: the explicit read schemas
     spare the schema-inference jobs and driver-side encodes replace
     each tier's exchange with a collect."""
-    assert built["jobs_inc"] <= 22, built["jobs_inc"]
+    assert built["jobs_inc"] <= 19, built["jobs_inc"]
 
 
 def test_first_run_job_count(built):
-    assert built["jobs_first"] <= 20, built["jobs_first"]
+    assert built["jobs_first"] <= 17, built["jobs_first"]
 
 
 def test_run_record(built):

@@ -298,30 +298,46 @@ def test_asof_join_variants_agree(spark):
 
 
 def test_salted_layout_splits_hot_conversations(spark):
-    from pyspark.sql import functions as F
-
     from tsforge_spark.operators.skew import salted_layout
 
     rows = []
     for t in range(3000):
         rows.append(("hot", t, pd.Timestamp("2024-01-01") + pd.Timedelta(seconds=t)))
+    for t in range(700):
+        rows.append(("warm", t, pd.Timestamp("2024-01-03") + pd.Timedelta(seconds=t)))
     for cid in range(20):
         for t in range(10):
             rows.append((f"cold{cid}", t, pd.Timestamp("2024-01-02") + pd.Timedelta(seconds=t)))
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "ts"])
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     df = spark.createDataFrame(pdf)
-    out = salted_layout(df, n_buckets=8, hot_threshold=1000, block_size=500)
+    out = salted_layout(df, n_buckets=8, block_size=500)
     got = out.toPandas()
     # hot conversation spreads over ceil(3000/500)=6 salt blocks
     assert got[got.conv_id == "hot"]["salt"].nunique() == 6
-    # cold conversations stay unsalted
-    assert (got[got.conv_id != "hot"]["salt"] == 0).all()
+    # a 700-turn conversation is past one block, so it takes two
+    assert sorted(got[got.conv_id == "warm"]["salt"].unique()) == [0, 1]
+    # short conversations stay in block 0
+    assert (got[got.conv_id.str.startswith("cold")]["salt"] == 0).all()
     # within each (hot, salt) block turn order is contiguous and sorted
     blk = got[(got.conv_id == "hot") & (got.salt == 2)]["turn_idx"].to_numpy()
     assert blk.min() == 1000 and blk.max() == 1499
     # no row loss
     assert len(got) == len(pdf)
+    # the salt is a function of the row: laid out alone, each
+    # conversation's rows get the salts they got inside the larger frame
+    key = ["conv_id", "turn_idx"]
+    whole = got[key + ["bucket_id", "salt"]].sort_values(key)
+    for cid in ("hot", "warm", "cold3"):
+        alone = (
+            salted_layout(df.filter(df.conv_id == cid), n_buckets=8, block_size=500)
+            .toPandas()[key + ["bucket_id", "salt"]]
+            .sort_values(key)
+        )
+        pd.testing.assert_frame_equal(
+            alone.reset_index(drop=True),
+            whole[whole.conv_id == cid].reset_index(drop=True),
+        )
 
 
 def test_sessionize_matches_session_window(spark):

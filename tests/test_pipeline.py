@@ -470,6 +470,33 @@ def test_history_dedup_scope_full_catches_ts_rewrites(spark, tmp_path):
     assert pipe.verify_text_equality(transcripts_to_spark(spark, base)) == 0
 
 
+def test_redelivery_is_dropped_under_another_bucket_count(
+    spark, base_pdf, tmp_path
+):
+    """Exactly-once ingest keys on (conv_id, turn_idx) alone: a store
+    built with one ``n_buckets`` and re-fed every turn by a pipeline
+    with another ingests none of them again (bucket_id depends on the
+    bucket count, so it cannot take part in the history anti-join)."""
+    store = SnapshotStore(str(tmp_path / "store"))
+    store.append(transcripts_to_spark(spark, base_pdf))
+    out = str(tmp_path / "out")
+    assert RollupPipeline(spark, store, out, n_buckets=4).run()["turns"] == (
+        len(base_pdf)
+    )
+
+    store.append(transcripts_to_spark(spark, base_pdf))
+    pipe = RollupPipeline(spark, store, out, n_buckets=8)
+    assert pipe.run()["turns"] == 0
+    turns = spark.read.parquet(pipe.turns_path)
+    assert turns.count() == len(base_pdf)
+    assert turns.select("conv_id", "turn_idx").distinct().count() == len(
+        base_pdf
+    )
+    assert pipe.verify_text_equality(
+        transcripts_to_spark(spark, base_pdf)
+    ) == 0
+
+
 def test_unique_key_check_trust_matches_probe(spark, tmp_path):
     """On contract-clean input the 'trust' mode (no in-delta dup probe)
     produces byte-identical tiers to the default probe mode."""

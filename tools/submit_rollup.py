@@ -58,22 +58,29 @@ def main() -> None:
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
 
-    store = SnapshotStore(args.store)
-    if args.demo_convs and store.last_snapshot_id() == 0:
-        from tsforge_spark.fixtures import make_transcripts, transcripts_to_spark
+    # stop the session before exit: a driver that exits with executors
+    # still registered leaves a standalone master relaunching them
+    try:
+        store = SnapshotStore(args.store)
+        if args.demo_convs and store.last_snapshot_id() == 0:
+            from tsforge_spark.fixtures import (
+                make_transcripts,
+                transcripts_to_spark,
+            )
 
-        store.append(
-            transcripts_to_spark(spark, make_transcripts(args.demo_convs, seed=42))
-        )
-    pipe = RollupPipeline(spark, store, args.out, n_buckets=args.n_buckets)
-    result = pipe.run()
-    if args.retention:
-        policy = {
-            k: int(v)
-            for k, v in (kv.split("=") for kv in args.retention.split(","))
-        }
-        result["retention"] = pipe.enforce_retention(policy)
-    print(json.dumps(result))
+            demo = make_transcripts(args.demo_convs, seed=42)
+            store.append(transcripts_to_spark(spark, demo))
+        pipe = RollupPipeline(spark, store, args.out, n_buckets=args.n_buckets)
+        result = pipe.run()
+        if args.retention:
+            policy = {
+                k: int(v)
+                for k, v in (kv.split("=") for kv in args.retention.split(","))
+            }
+            result["retention"] = pipe.enforce_retention(policy)
+        print(json.dumps(result))
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

@@ -42,8 +42,9 @@ def make_transcripts(
     zipf_a: float = 1.5,
     max_turns: int = 5000,
 ) -> pd.DataFrame:
-    """Seeded transcript panel: Zipf turn counts (hot conversations →
-    exercises salting), Poisson-ish exponential inter-turn gaps, and
+    """Seeded transcript panel: Zipf turn counts (a few long
+    conversations; at most ``max_turns``, so none reaches a 50,000-turn
+    salt block), Poisson-ish exponential inter-turn gaps, and
     multi-hour silences in ~10% of conversations (empty 1m buckets →
     exercises gap fill).  ``(conv_id, turn_idx)`` unique; ``ts`` strictly
     increasing within a conversation ordered by ``turn_idx``.

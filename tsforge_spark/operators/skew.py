@@ -1,22 +1,19 @@
-"""Explicit skew control: hot-key detection + block salting
+"""Explicit skew control: block salting by ``turn_idx``
 (SURVEY §4.2.1; north rule: "hash(conv_id) bucketed with explicit
 salting for hot conversations").
 
 AQE splits skewed *join* partitions but cannot split one giant group fed
 to a grouped kernel or one oversized hash-bucket partition.  The engine's
-defense:
-
-1. ``hot_keys``: cheap pre-aggregation marking ids whose row count
-   exceeds a threshold (broadcast back — the hot set is small by
-   definition).
-2. ``salted_layout``: physical partition key
-   ``(bucket_id, salt)`` where ``salt = turn_idx // block_size`` for hot
-   ids and 0 otherwise — a hot conversation spreads over ceil(n/block)
-   partitions in *contiguous, internally ordered* blocks, so
-   ``sortWithinPartitions(conv_id, ts, turn_idx)`` still yields stable
-   per-block turn order (the invariant the text-equality check needs),
-   while no single partition holds more than ``block_size`` of any one
-   conversation.
+defense is ``salted_layout``: physical partition key ``(bucket_id,
+salt)`` where ``salt = turn_idx // block_size`` for EVERY row.  After
+dedup ``(conv_id, turn_idx)`` is unique, so no partition key holds more
+than ``block_size`` rows of one conversation — a bound that holds by key
+uniqueness, with no hot-key measurement.  A long conversation spreads
+over ceil(n/block) partitions in *contiguous, internally ordered*
+blocks, so ``sortWithinPartitions(conv_id, ts, turn_idx)`` still yields
+stable per-block turn order (the invariant the text-equality check
+needs).  The salt is a function of the row alone: a turn lands in the
+same place whichever delta delivers it.
 
 The blob encoder needs no salt: its groups are already bounded by
 segment chunking (codec/blobs.py).  Tumbling rollups need none either:
@@ -30,37 +27,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hot_keys(
-    df: DataFrame, key: str, threshold: int = 100_000
-) -> DataFrame:
-    """Ids with more than ``threshold`` rows — one narrow aggregation."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") > threshold)
-        .select(key)
-    )
-
-
 def salted_layout(
     df: DataFrame,
     key: str = "conv_id",
     order_col: str = "turn_idx",
     n_buckets: int = 32,
-    hot_threshold: int = 100_000,
     block_size: int = 50_000,
-    hot_ids: list | None = None,
     sort_prefix: tuple[str, ...] = (),
     extra_partition_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Add ``bucket_id`` and ``salt`` columns and repartition on both,
-    sorted within partitions by ``(*sort_prefix, key, ts, order_col)``.
-
-    ``hot_ids``: precomputed hot-key values (e.g. from a key aggregate
-    the caller already ran for dedup verification) — skips the internal
-    detection scan.  The hot set is small by definition, so it travels
-    as literals; an empty list means the salt column is a constant and
-    the layout costs exactly one shuffle with no join at all.
+    """Add ``bucket_id`` and ``salt = order_col // block_size`` columns
+    and repartition on both, sorted within partitions by
+    ``(*sort_prefix, key, ts, order_col)``.
 
     ``sort_prefix``: extra leading sort columns (must already exist on
     ``df``, or be ``bucket_id``).  A caller that writes the frame
@@ -73,25 +51,12 @@ def salted_layout(
     already met and the layout sort is the plan's only sort.  The
     partition columns are constant within a written file, so per-file
     row order is still ``(key, ts, order_col)``."""
-    if hot_ids is None:
-        hot = hot_keys(df, key, hot_threshold).withColumn("_hot", F.lit(1))
-        out = df.join(F.broadcast(hot), key, "left")
-        is_hot = F.col("_hot").isNotNull()
-    else:
-        out = df
-        is_hot = F.col(key).isin(hot_ids) if hot_ids else F.lit(False)
-    salt = F.when(
-        is_hot,
+    out = df.withColumn(
+        "bucket_id", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
+    ).withColumn(
+        "salt",
         (F.col(order_col).cast("long") / F.lit(block_size)).cast("int"),
-    ).otherwise(F.lit(0))
-    out = (
-        out.withColumn(
-            "bucket_id", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int")
-        )
-        .withColumn("salt", salt)
     )
-    if hot_ids is None:
-        out = out.drop("_hot")
     # Sort led by xxhash64(key): real-world ids share long literal
     # prefixes ("conv_000...", "sess_2025..."), which defeats the
     # sorter's 8-byte prefix comparison — every compare walks the full

@@ -16,31 +16,9 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
-
 
 def new_job_id() -> str:
     return uuid.uuid4().hex[:12]
-
-
-def lineage_rows(
-    spark: SparkSession,
-    job_id: str,
-    stage: str,
-    snapshot_id: int,
-    counts: list[tuple[int, int]],
-    byte_count: int | None = None,
-    detail: str | None = None,
-) -> DataFrame:
-    rows = [
-        (job_id, stage, snapshot_id, int(b), int(c), byte_count, detail)
-        for b, c in counts
-    ]
-    return spark.createDataFrame(
-        rows,
-        "job_id string, stage string, snapshot_id long, bucket_id int, "
-        "row_count long, byte_count long, detail string",
-    )
 
 
 class MetricsLog:
@@ -72,8 +50,9 @@ def append_lineage(
     """Append lineage rows as ONE driver-written parquet file — a
     lineage batch is ≤ n_buckets tiny rows, and a Spark write job costs
     ~1s of fixed launch/commit overhead per pipeline run (on Iceberg
-    this is a metadata-table insert).  Schema matches ``lineage_rows``
-    so Spark reads the directory transparently."""
+    this is a metadata-table insert).  Columns and types are those of
+    ``schema.LINEAGE_SCHEMA``, so Spark reads the directory
+    transparently."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

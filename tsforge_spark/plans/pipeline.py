@@ -301,25 +301,27 @@ class RollupPipeline:
 
         Key-only probes run CONCURRENTLY (narrow column-pruned scans
         submitted from separate threads fill each other's idle task
-        slots):
+        slots), and only when something consumes their output:
 
-        - dedup verification on the 64-bit key hash — uniqueness of
-          ``(conv_id, turn_idx)`` is the input contract, so the full-row
-          ``dropDuplicates`` shuffle runs only when violations exist.
-          Hashing shrinks the probe shuffle to 8-byte keys; a hash
-          collision can only cause a false *positive* verdict (an
-          unnecessary dropDuplicates pass), never a wrong result.
-        - the hot-conversation ids (``skew.hot_keys``), and (when
-          ``need_days``) the affected-day set.  Per-bucket lineage
-          counts are not probed: they ride the turns write itself
-          (``_write_turns``).
+        - dedup verification on the 64-bit key hash (probe mode) —
+          uniqueness of ``(conv_id, turn_idx)`` is the input contract,
+          so the full-row ``dropDuplicates`` shuffle runs only when
+          violations exist.  Hashing shrinks the probe shuffle to 8-byte
+          keys; a hash collision can only cause a false *positive*
+          verdict (an unnecessary dropDuplicates pass), never a wrong
+          result.
+        - the affected-day set (``need_days``: incremental runs).
+
+        The salt needs no probe: ``skew.salted_layout`` derives it from
+        ``turn_idx`` alone.  Per-bucket lineage counts ride the turns
+        write itself (``_write_turns``).
 
         Affected days derive from the CLEAN (pre-dedup) delta: a row
         whose key columns are null never lands in any store, so its day
         needs no heal; rows dropped by DEDUP still contribute their days
         (the crash-replay anchor — a replayed snapshot whose rows were
         already ingested must still recompute the days it touched)."""
-        from tsforge_spark.operators.skew import hot_keys, salted_layout
+        from tsforge_spark.operators.skew import salted_layout
 
         clean = delta.dropna(subset=["conv_id", "turn_idx", "ts"])
 
@@ -336,10 +338,6 @@ class RollupPipeline:
                 > 0
             )
 
-        def _hot_probe() -> list:
-            # the hot set is small by definition, so the collect is too
-            return [r[0] for r in hot_keys(clean, "conv_id").collect()]
-
         def _days_probe() -> list:
             # map-side distinct to a handful of day rows
             return [
@@ -349,31 +347,19 @@ class RollupPipeline:
                 .collect()
             ]
 
-        # The probe scan is only worth paying when something consumes
-        # its output: dup verification (probe mode) or the affected-day
-        # set (incremental runs).  A trust-mode FIRST run needs neither
-        # — lineage counts ride the store write, days come from the
-        # partition dirs, and hot-conversation detection happens INLINE
-        # in salted_layout (hot_ids=None → a column-pruned
-        # self-aggregate + broadcast left join inside the write job: no
-        # separate driver round-trip, pipelined with the scan it already
-        # does).  Trust mode skips only the in-delta verification (see
-        # __init__); history dedup still applies.
-        has_dups, hot_ids, days = False, None, None
+        has_dups, days = False, None
         if self.unique_key_check == "probe" or need_days:
             # FAIR scheduling interleaves the probes' tasks, so their
             # wall ≈ the slowest one
-            with ThreadPoolExecutor(3) as ex:
+            with ThreadPoolExecutor(2) as ex:
                 f_dup = (
                     ex.submit(_dup_probe)
                     if self.unique_key_check == "probe"
                     else None
                 )
                 f_days = ex.submit(_days_probe) if need_days else None
-                f_hot = ex.submit(_hot_probe)
             has_dups = f_dup is not None and f_dup.result()
             days = f_days.result() if f_days is not None else None
-            hot_ids = f_hot.result()
         if has_dups:
             clean = clean.dropDuplicates(["conv_id", "turn_idx"])
         existing = self._read_if_exists(self.turns_path)
@@ -388,14 +374,14 @@ class RollupPipeline:
             keys = existing
             if days and self.history_dedup_scope == "affected-days":
                 keys = self._day_filter("day", days)(keys)
-            keys = keys.select("bucket_id", "conv_id", "turn_idx")
-            clean = clean.withColumn(
-                "bucket_id",
-                F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets)).cast("int"),
-            ).join(
-                keys, ["bucket_id", "conv_id", "turn_idx"], "left_anti"
-            ).drop("bucket_id")
-        # canonical layout: hash buckets + explicit hot-conversation salt
+            # The key alone decides a duplicate: bucket_id depends on
+            # n_buckets, which may differ from the run that wrote history.
+            clean = clean.join(
+                keys.select("conv_id", "turn_idx"),
+                ["conv_id", "turn_idx"],
+                "left_anti",
+            )
+        # canonical layout: hash buckets + turn_idx block salt
         # (operators/skew.py) + stable (conv_id, ts, turn_idx) order.
         # text_len rides the store so tier rebuilds can column-prune the
         # text payload itself (the bulk of the store's bytes).
@@ -413,7 +399,6 @@ class RollupPipeline:
             key="conv_id",
             order_col="turn_idx",
             n_buckets=self.n_buckets,
-            hot_ids=hot_ids,
             # day joins the exchange key: ~days× more distinct
             # partition values over the same partition count evens the
             # write wave out — see salted_layout's note.

@@ -29,9 +29,10 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "134217728",
     # Partition discovery: below this many paths the driver lists
     # directories itself instead of launching a distributed listing job.
-    # A (day, bucket)-partitioned store has ~10^3 dirs; on a POSIX fs a
-    # sequential scandir takes ~10ms where the listing JOB's fixed cost
-    # is ~3s PER READ (measured: 3.2s -> 0.25s read-init), and the
+    # The day-partitioned stores hold one dir per day (hundreds at
+    # scale); on a POSIX fs a sequential scandir of ~10^3 dirs takes
+    # ~10ms where the listing JOB's fixed cost is ~3s PER READ
+    # (measured: 3.2s -> 0.25s read-init), and the
     # pipeline opens its stores several times per run.  On a real
     # deployment the table format's manifests (Iceberg) replace listing
     # entirely; object-store paths without manifests should keep the
@@ -45,8 +46,8 @@ ENGINE_CONFS: dict[str, str] = {
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.hadoop.parquet.compression.codec.zstd.level": "1",
     # v2 committer: task-side file moves; v1's driver-side sequential
-    # commit serializes on file count (day×bucket partitioned writes
-    # produce hundreds of files and made 32 cores SLOWER than 8).
+    # commit serializes on file count (day-partitioned writes produce
+    # hundreds of files and made 32 cores SLOWER than 8).
     # On real object stores the job would use an atomic table format
     # (Iceberg) instead.
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version": "2",
