@@ -7,10 +7,11 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tsforge_spark.codec.blobs import decode_blobs, encode_tier_blobs
+from tsforge_spark.codec.blobs import (
+    decode_blobs, encode_tier_blobs, heal_interrupted_swaps,
+)
 from tsforge_spark.fixtures import make_late_batch, make_transcripts, transcripts_to_spark
 from tsforge_spark.operators.rollup import rollup_transcripts
-from tsforge_spark.plans import pipeline as pipeline_module
 from tsforge_spark.plans.pipeline import RollupPipeline
 from tsforge_spark.sources.snapshots import SnapshotStore
 
@@ -249,32 +250,60 @@ def test_late_turn_in_prior_month_heals_blob_segment(spark, tmp_path):
     assert jan.count() > 0
 
 
-def test_backfill_day_join_path_matches_literals(spark, tmp_path, monkeypatch):
-    """The broadcast semi-join day filter (the >200-affected-days
-    backfill path) must produce the same tiers as the literal-isin path
-    — forced via DAY_LITERAL_LIMIT=0."""
-    from tsforge_spark.fixtures import make_transcripts, make_late_batch, transcripts_to_spark
+def test_long_day_list_prunes_partitions_by_inset(spark, tmp_path):
+    """A delta spanning 1,000 days (a long backfill) still prunes the
+    history anti-join's turns scan at planning time: Spark plans the
+    day literals as one ``INSET`` partition filter."""
+    import datetime as dt
 
-    base = make_transcripts(n_convs=25, seed=51)
-    late = make_late_batch(base, seed=52)
+    from tsforge_spark.schema import TRANSCRIPT_SCHEMA
 
-    outs = {}
-    for name, limit in (("literal", 200), ("join", 0)):
-        monkeypatch.setattr(pipeline_module, "DAY_LITERAL_LIMIT", limit)
-        store = SnapshotStore(str(tmp_path / f"store_{name}"))
-        store.append(transcripts_to_spark(spark, base))
+    pipe = RollupPipeline(
+        spark, SnapshotStore(str(tmp_path / "store")), str(tmp_path / "out")
+    )
+    spark.createDataFrame(
+        [("c0", 0, dt.date(2023, 1, 1))], "conv_id string, turn_idx int, day date"
+    ).write.partitionBy("day").parquet(pipe.turns_path)
+    start = dt.datetime(2023, 1, 1, 12)
+    delta = spark.createDataFrame(
+        [
+            ("c1", i, "user", "hi", None, start + dt.timedelta(days=i))
+            for i in range(1000)
+        ],
+        TRANSCRIPT_SCHEMA,
+    )
+    prep = pipe._prepare(delta, need_days=True)
+    assert len(prep.days) == 1000
+    plan = prep.laid_out._jdf.queryExecution().executedPlan().toString()
+    pf = [
+        ln for ln in plan.splitlines()
+        if "PartitionFilters" in ln and "day" in ln.split("PartitionFilters")[1]
+    ]
+    assert pf and "INSET" in pf[0], plan
+
+
+def test_construction_leaves_session_overwrite_mode(spark, tmp_path):
+    """``RollupPipeline`` passes dynamic partition overwrite as a write
+    option: the caller's session conf stays as it was, and a tier merge
+    in a STATIC session still keeps the day partitions it does not
+    touch."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
         pipe = RollupPipeline(
-            spark, store, str(tmp_path / f"out_{name}"), n_buckets=4
+            spark, SnapshotStore(str(tmp_path / "store")), str(tmp_path / "out")
         )
-        assert pipe.run()["status"] == "ok"
-        store.append(transcripts_to_spark(spark, late))
-        assert pipe.run()["status"] == "ok"
-        outs[name] = {
-            tier: _tier_norm(pipe.read_tier(tier).toPandas())
-            for tier in ("1m", "1h", "1d")
-        }
-    for tier in ("1m", "1h", "1d"):
-        pd.testing.assert_frame_equal(outs["literal"][tier], outs["join"][tier])
+        assert spark.conf.get(key) == "STATIC"
+        target = str(tmp_path / "tier")
+        rows = "select id, date_add(date'2025-01-01', cast(id as int)) as day"
+        pipe._merge_partitions(spark.sql(f"{rows} from range(3)"), target)
+        pipe._merge_partitions(spark.sql(f"{rows} from range(1, 2)"), target)
+        assert sorted(
+            r["id"] for r in spark.read.parquet(target).collect()
+        ) == [0, 1, 2]
+    finally:
+        spark.conf.set(key, prior)
 
 
 def test_read_series_serving_path(spark, tmp_path):
@@ -348,11 +377,6 @@ def test_retention_enforcement(spark, tmp_path):
         .reset_index(drop=True)
     )
     before_1d = _tier_norm(pipe.read_tier("1d").toPandas())
-
-    dry = pipe.enforce_retention({"1m": 7, "1h": 7, "1d": None}, dry_run=True)
-    assert dry["deleted"]["1m"]  # something would expire
-    # dry run deleted nothing
-    assert len(_tier_norm(pipe.read_tier("1d").toPandas())) == len(before_1d)
 
     res = pipe.enforce_retention({"1m": 7, "1h": 7, "1d": None})
     assert res["status"] == "ok" and res["deleted"]["1m"]
@@ -583,7 +607,7 @@ def test_interrupted_blob_swap_heals_and_keeps_carried_blobs(
     # post-install junk and must just be dropped
     src = os.path.join(tier_dir, subs[-1])
     shutil.copytree(src, os.path.join(tier_dir, f".trash_{subs[-1]}"))
-    pipe._heal_interrupted_swaps(tier_dir)
+    heal_interrupted_swaps(tier_dir)
     assert not any(
         s.startswith(".trash_") for s in os.listdir(tier_dir)
     )

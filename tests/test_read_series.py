@@ -6,6 +6,7 @@ session time zone."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import numpy as np
@@ -13,14 +14,16 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tsforge_spark.codec import blobs
 from tsforge_spark.codec.blobs import BLOB_READ_SCHEMA, read_series
 from tsforge_spark.fixtures import make_transcripts, transcripts_to_spark
 from tsforge_spark.plans.pipeline import RollupPipeline
 from tsforge_spark.sources.snapshots import SnapshotStore
 
 MEASURES = ("turns", "tool_calls")
+LOCAL = blobs.DECODE_CHUNK_BYTES
 # any budget below the smallest pruned file routes a read to Spark
-FORCE_SPARK = "1"
+FORCE_SPARK = 1
 
 
 @pytest.fixture(scope="module")
@@ -46,12 +49,10 @@ def built(spark, tmp_path_factory):
             "convs": sorted(base["conv_id"].unique())}
 
 
-def _budget(monkeypatch, cap) -> None:
-    """Set the decode budget: ``None`` keeps the default."""
-    if cap is None:
-        monkeypatch.delenv("TSF_DECODE_CHUNK_BYTES", raising=False)
-    else:
-        monkeypatch.setenv("TSF_DECODE_CHUNK_BYTES", cap)
+def _budget(monkeypatch, cap: int) -> None:
+    """Set the decode budget ``read_series`` picks its branch by (on
+    the driver, so executors keep the default)."""
+    monkeypatch.setattr(blobs, "DECODE_CHUNK_BYTES", cap)
 
 
 def _rows(df) -> pd.DataFrame:
@@ -106,7 +107,7 @@ def test_read_series_branches_return_same_rows(spark, built, monkeypatch):
     for case in _cases(built["convs"]):
         tier = case[0]
         want = _expected(cells[tier], *case[1:])
-        _budget(monkeypatch, None)
+        _budget(monkeypatch, LOCAL)
         local = _rows(read_series(spark, pipe.blobs_path, *case))
         _budget(monkeypatch, FORCE_SPARK)
         remote = _rows(read_series(spark, pipe.blobs_path, *case))
@@ -118,11 +119,34 @@ def test_read_series_branches_return_same_rows(spark, built, monkeypatch):
 
 
 def test_read_series_tier_without_blobs(spark, built, monkeypatch):
-    for cap in (None, FORCE_SPARK):
+    for cap in (LOCAL, FORCE_SPARK):
         _budget(monkeypatch, cap)
         got = read_series(spark, built["no_1d"], "1d", "2025-01-01", "2025-03-01")
         assert got.count() == 0
         assert read_series(spark, built["no_1d"], "1h", "2025-01-01", "2025-03-01").count() > 0
+
+
+@pytest.mark.parametrize("cap", [LOCAL, FORCE_SPARK], ids=["local", "spark"])
+def test_read_series_restores_interrupted_swap(
+    spark, built, tmp_path, monkeypatch, cap
+):
+    """A crash between a blob swap's two renames leaves a segment's
+    bytes under ``.trash_seg_day=<d>`` with ``seg_day=<d>`` missing.
+    ``read_series`` restores it before listing, so the read returns the
+    pre-swap points instead of none."""
+    _budget(monkeypatch, cap)
+    store = str(tmp_path / "blobs")
+    shutil.copytree(built["pipe"].blobs_path, store)
+    tier_dir = f"{store}/tier_part=1m"
+    os.replace(f"{tier_dir}/seg_day=2025-01-29", f"{tier_dir}/.trash_seg_day=2025-01-29")
+    t0, t1 = "2025-01-29", "2025-01-29 23:59:59"
+    got = _rows(read_series(spark, store, "1m", t0, t1))
+    want = _expected(built["cells"]["1m"], t0, t1, None, None)
+    assert len(got) == len(want) > 0
+    pd.testing.assert_frame_equal(got, want)
+    assert sorted(os.listdir(tier_dir)) == sorted(
+        os.listdir(f"{built['pipe'].blobs_path}/tier_part=1m")
+    )
 
 
 def test_read_series_job_counts(spark, built, monkeypatch):
@@ -132,7 +156,7 @@ def test_read_series_job_counts(spark, built, monkeypatch):
     dag = spark.sparkContext._jsc.sc().dagScheduler()
     args = (spark, pipe.blobs_path, "1m", "2025-01-25", "2025-01-27 23:59:59")
 
-    _budget(monkeypatch, None)
+    _budget(monkeypatch, LOCAL)
     before = dag.numTotalJobs()
     local = read_series(*args)
     assert dag.numTotalJobs() == before
@@ -160,7 +184,7 @@ def test_blob_read_schema_matches_inferred(spark, built):
     )
 
 
-@pytest.mark.parametrize("cap", [None, FORCE_SPARK], ids=["local", "spark"])
+@pytest.mark.parametrize("cap", [LOCAL, FORCE_SPARK], ids=["local", "spark"])
 def test_read_series_exact_under_new_york_session(spark, built, monkeypatch, cap):
     """Naive bounds are UTC instants and decoded buckets are instants:
     under an America/New_York session both branches, and

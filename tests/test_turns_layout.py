@@ -223,7 +223,7 @@ def test_old_layout_store_refused_then_migrated(spark, tmp_path):
     flat = [f for f in os.listdir(tmp_path / "flat") if f.endswith(".parquet")]
     shutil.copy(tmp_path / "flat" / flat[0], os.path.join(mixed, day, flat[0]))
     with pytest.raises(Exception, match="(?i)conflicting"):
-        pipe._read_if_exists(mixed)
+        pipe._read_turns(mixed)
 
     late = make_late_batch(base, seed=85)
     store.append(transcripts_to_spark(spark, late))
@@ -250,9 +250,10 @@ def test_old_layout_store_refused_then_migrated(spark, tmp_path):
         )
 
 
-def test_read_if_exists_sees_only_listable_data(spark, tmp_path):
+def test_turns_history_sees_only_listable_data(spark, tmp_path):
     """A turns dir holding only a killed write's ``_temporary`` debris
-    has no history (Spark hides it); one with listable files is read."""
+    reads as no history (Spark hides it); one with listable files is
+    read."""
     pipe = RollupPipeline(
         spark, SnapshotStore(str(tmp_path / "store")), str(tmp_path / "out")
     )
@@ -263,10 +264,10 @@ def test_read_if_exists_sees_only_listable_data(spark, tmp_path):
     debris = os.path.join(pipe.turns_path, "_temporary", "0", "day=2025-01-01")
     os.makedirs(debris)
     os.link(tmp_path / "src" / part, os.path.join(debris, part))
-    assert pipe._read_if_exists(pipe.turns_path) is None
+    assert pipe._read_turns().count() == 0
     os.makedirs(os.path.join(pipe.turns_path, "day=2025-01-01"))
     os.link(
         tmp_path / "src" / part,
         os.path.join(pipe.turns_path, "day=2025-01-01", part),
     )
-    assert pipe._read_if_exists(pipe.turns_path).count() == 3
+    assert pipe._read_turns().count() == 3

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import datetime as _dt
 import os as _os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -34,13 +35,8 @@ MEASURES = ("turns", "tool_calls")
 # decode-kernel sub-batch cap (bytes of blob payload per
 # decode_blobs_many call) — see _decode_frames.  It also bounds a
 # driver-side read: read_series decodes on the driver only when the
-# pruned files' total bytes fit it.  Env-tunable so tests can force the
-# split path and the Spark branch of read_series.  Read at CALL time,
-# not import time: a module-level binding would freeze the value for
-# driver-local execution while fresh executor workers still re-read
-# it — asymmetric behavior for the advertised test hook.
-def _decode_chunk_bytes() -> int:
-    return int(_os.environ.get("TSF_DECODE_CHUNK_BYTES", str(64 << 20)))
+# pruned files' total bytes fit it.
+DECODE_CHUNK_BYTES = 64 << 20
 
 
 BLOB_SCHEMA = T.StructType(
@@ -237,7 +233,7 @@ def read_series(
        edge segments decode fully — bounded by one segment per side).
 
     Where the decode runs depends on the pruned files' total bytes:
-    when they fit the decode budget (``_decode_chunk_bytes()``) the
+    when they fit the decode budget (``DECODE_CHUNK_BYTES``) the
     driver reads them with ``pyarrow.dataset``, decodes them and wraps
     the points in a local DataFrame — no Spark job until the caller acts
     on it, and then one.  Larger reads decode on the executors through
@@ -250,7 +246,7 @@ def read_series(
         t.date().replace(day=1) if month else t.date() for t in (t0, t1)
     )
     files = _pruned_files(blobs_path, tier, lo, hi)
-    if sum(size for _, size in files) <= _decode_chunk_bytes():
+    if sum(size for _, size in files) <= DECODE_CHUNK_BYTES:
         return _read_series_local(
             spark, [f for f, _ in files], t0, t1, conv_ids, measures
         )
@@ -281,10 +277,13 @@ def _pruned_files(
     """``(path, bytes)`` of the parquet files in the ``seg_day`` partitions
     of ``tier`` within ``[lo, hi]``.  Names starting with ``_`` or ``.``
     (``.crc`` files, ``_temporary`` and ``.trash_*`` swap directories)
-    are skipped, as Spark's listing skips them."""
+    are skipped, as Spark's listing skips them; a segment a crash left
+    under ``.trash_*`` mid-swap is restored first
+    (``heal_interrupted_swaps``)."""
     if not _os.path.isdir(blobs_path):
         raise FileNotFoundError(f"blob store {blobs_path} does not exist")
     tier_dir = _os.path.join(blobs_path, f"tier_part={tier}")
+    heal_interrupted_swaps(tier_dir)
     if not _os.path.isdir(tier_dir):
         return []
     out = []
@@ -301,6 +300,48 @@ def _pruned_files(
             ):
                 out.append((f.path, f.stat().st_size))
     return out
+
+
+def heal_interrupted_swaps(target: str) -> None:
+    """Recover partitions from a swap interrupted between its two
+    renames: a leftover ``.trash_<sub>`` dir whose ``<sub>`` is missing
+    means the old partition was renamed away but the new one never
+    landed — restore it (the replay recompute then overwrites it
+    normally).  A leftover WITH ``<sub>`` present is post-install debris
+    — drop it.  The pipeline runs this before every swap into
+    ``target``, and serving reads (``read_series``,
+    ``RollupPipeline.read_blobs``) run it before they list ``target``,
+    so a read after a crash sees the pre-swap bytes rather than a
+    missing partition.
+
+    Every filesystem op tolerates concurrent mutation (OSError → skip):
+    a serving reader may run this while a live writer is inside its
+    two-rename window, and the reader 'restoring' that in-flight trash
+    dir must never fail the writer's commit — the writer's own
+    pre-commit heal (under its subtree ownership) is the authoritative
+    one; the reader's is best-effort so a post-crash read sees the
+    pre-swap bytes."""
+    if not _os.path.isdir(target):
+        return
+    try:
+        entries = _os.listdir(target)
+    except OSError:
+        return
+    for t in entries:
+        if not t.startswith(".trash_"):
+            continue
+        orig = _os.path.join(target, t[len(".trash_"):])
+        tr = _os.path.join(target, t)
+        try:
+            if _os.path.exists(orig):
+                shutil.rmtree(tr, ignore_errors=True)
+            else:
+                _os.replace(tr, orig)
+        except OSError:
+            # lost the race with the writer (it re-installed orig or
+            # removed the trash between our check and the rename) — the
+            # writer's state is the correct one; leave it alone
+            continue
 
 
 def _read_series_local(
@@ -364,11 +405,10 @@ def _decode_frames(frames):
     Arrow batch of DENSE blobs (1m day segments, ~10KB each) would join
     ~700MB before decoding.  Split on cumulative blob bytes; coarse-tier
     batches (~20B/blob) pass through as one chunk."""
-    cap = _decode_chunk_bytes()
     for full in frames:
         if len(full) == 0:
             continue
-        yield from (_decode_one(pdf) for pdf in _split_by_bytes(full, cap))
+        yield from map(_decode_one, _split_by_bytes(full, DECODE_CHUNK_BYTES))
 
 
 def _decode_one(pdf: pd.DataFrame) -> pd.DataFrame:

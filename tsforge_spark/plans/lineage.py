@@ -50,9 +50,9 @@ def append_lineage(
     """Append lineage rows as ONE driver-written parquet file — a
     lineage batch is ≤ n_buckets tiny rows, and a Spark write job costs
     ~1s of fixed launch/commit overhead per pipeline run (on Iceberg
-    this is a metadata-table insert).  Columns and types are those of
-    ``schema.LINEAGE_SCHEMA``, so Spark reads the directory
-    transparently."""
+    this is a metadata-table insert).  Every file carries the same
+    all-nullable schema — the table below is the lineage table's one
+    definition — so Spark reads the directory transparently."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 

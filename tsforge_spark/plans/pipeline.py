@@ -58,7 +58,7 @@ from pyspark.sql import functions as F
 
 from tsforge_spark.codec.blobs import (
     BLOB_READ_SCHEMA, SEGMENT_TRUNC, decode_blobs, encode_tier_blobs,
-    encodes_on_driver,
+    encodes_on_driver, heal_interrupted_swaps,
 )
 from tsforge_spark.operators.rollup import fold_tier, rollup_transcripts
 from tsforge_spark.plans.lineage import MetricsLog, append_lineage, new_job_id
@@ -66,10 +66,6 @@ from tsforge_spark.schema import TIER_READ_SCHEMA, TURNS_READ_SCHEMA
 from tsforge_spark.sources.snapshots import SnapshotStore
 
 TIERS = ["1m", "1h", "1d"]
-
-# affected-day lists up to this long filter partitions by literals;
-# longer ones by a broadcast semi-join (``RollupPipeline._day_filter``)
-DAY_LITERAL_LIMIT = 200
 
 
 def _segment_start(d: _dt.date, unit: str) -> _dt.datetime:
@@ -174,7 +170,6 @@ class RollupPipeline:
             raise ValueError("unique_key_check must be 'probe' or 'trust'")
         self.unique_key_check = unique_key_check
         os.makedirs(out_dir, exist_ok=True)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # ---- paths ----
     def tier_path(self, tier: str) -> str:
@@ -230,24 +225,6 @@ class RollupPipeline:
             path or self.turns_path
         )
 
-    def _read_if_exists(self, path: str) -> DataFrame | None:
-        """The turns store at ``path``, or None when it holds no data
-        files Spark would list — names starting with ``_`` or ``.`` are
-        hidden from Spark, so the ``_temporary`` debris of a write killed
-        before its commit counts as no data.  Any other read failure (a
-        corrupt footer, conflicting partition directories) propagates:
-        treating an unreadable store as empty would silently skip dedup
-        against history."""
-        hidden = ("_", ".")
-        for _root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith(hidden)]
-            if any(
-                f.endswith(".parquet") and not f.startswith(hidden)
-                for f in files
-            ):
-                return self._read_turns(path)
-        return None
-
     def _legacy_turns_days(self) -> list[str]:
         """Day partitions of the turns store still in the old
         ``day=/bucket_id=`` directory layout (one listing per day)."""
@@ -270,7 +247,7 @@ class RollupPipeline:
         ``compact_turns()`` migrates it in place.  Also restores any day
         partition whose swap a crash interrupted inside
         ``compact_turns``."""
-        self._heal_interrupted_swaps(self.turns_path)
+        heal_interrupted_swaps(self.turns_path)
         legacy = self._legacy_turns_days()
         if legacy:
             raise RuntimeError(
@@ -281,21 +258,6 @@ class RollupPipeline:
             )
 
     # ---- stages ----
-    def _day_filter(self, col_name: str, days):
-        """Partition filter for a list of affected event days.  Small
-        lists go in as literals (static partition pruning, guaranteed at
-        planning time); a months-long backfill would put thousands of
-        literals in the plan, so large lists become a broadcast semi-join
-        against a days dim (dynamic partition pruning)."""
-        if len(days) <= DAY_LITERAL_LIMIT:
-            return lambda df: df.filter(F.col(col_name).isin(days))
-        dim = F.broadcast(
-            self.spark.createDataFrame([(d,) for d in days], "_aff_day date")
-        )
-        return lambda df: df.join(
-            dim, df[col_name] == dim["_aff_day"], "left_semi"
-        )
-
     def _prepare(self, delta: DataFrame, need_days: bool = False) -> _Prepared:
         """Clean + dedup + canonical bucketed/ordered layout.
 
@@ -362,18 +324,20 @@ class RollupPipeline:
             days = f_days.result() if f_days is not None else None
         if has_dups:
             clean = clean.dropDuplicates(["conv_id", "turn_idx"])
-        existing = self._read_if_exists(self.turns_path)
-        if existing is not None:
+        if os.path.isdir(self.turns_path):
             # exactly-once ingest: drop turns already processed.  The
             # turns store is day-partitioned; under the ts-immutability
             # contract (see __init__: history_dedup_scope) only the
             # delta's affected days can contain prior copies of its
             # keys, so the history scan partition-prunes to those days
-            # instead of growing with total history size.  scope="full"
+            # instead of growing with total history size (Spark plans a
+            # long day list as one INSET partition filter).  scope="full"
             # keeps the whole-history key scan for feeds that rewrite ts.
-            keys = existing
+            # Files Spark hides (a killed write's ``_temporary`` debris)
+            # read as no rows; any other read failure propagates.
+            keys = self._read_turns()
             if days and self.history_dedup_scope == "affected-days":
-                keys = self._day_filter("day", days)(keys)
+                keys = keys.filter(F.col("day").isin(days))
             # The key alone decides a duplicate: bucket_id depends on
             # n_buckets, which may differ from the run that wrote history.
             clean = clean.join(
@@ -425,8 +389,12 @@ class RollupPipeline:
         leaves old partitions readable; a crash mid-commit can leave a
         subset replaced — both are healed by the replay contract (the
         checkpoint only advances after all stages commit, and every stage
-        is a full recompute of the affected day partitions)."""
-        new_df.write.mode("overwrite").partitionBy("day").parquet(target)
+        is a full recompute of the affected day partitions).  The
+        dynamic mode is a write option, so the caller's session keeps
+        its own ``partitionOverwriteMode``."""
+        new_df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("day").parquet(target)
 
     def _write_turns(self, prepared: DataFrame, path: str) -> tuple[list, int]:
         """Write the laid-out turns ``partitionBy("day")`` to ``path`` and
@@ -475,45 +443,6 @@ class RollupPipeline:
                     moved += 1
         return moved
 
-    def _heal_interrupted_swaps(self, target: str) -> None:
-        """Recover partitions from a swap interrupted between its two
-        renames: a leftover ``.trash_<sub>`` dir whose ``<sub>`` is
-        missing means the old partition was renamed away but the new one
-        never landed — restore it (the replay recompute then overwrites
-        it normally).  A leftover WITH ``<sub>`` present is post-install
-        debris — drop it.  Runs before every swap into ``target`` and
-        before serving reads of it (``read_blobs``), so a read after a
-        crash sees the pre-swap bytes rather than a missing partition.
-
-        Every filesystem op tolerates concurrent mutation (OSError →
-        skip): a serving reader may run this while a live writer is
-        inside its two-rename window, and the reader 'restoring' that
-        in-flight trash dir must never fail the writer's commit — the
-        writer's own pre-commit heal (under its subtree ownership) is
-        the authoritative one; the reader's is best-effort so a
-        post-crash read sees the pre-swap bytes."""
-        if not os.path.isdir(target):
-            return
-        try:
-            entries = os.listdir(target)
-        except OSError:
-            return
-        for t in entries:
-            if not t.startswith(".trash_"):
-                continue
-            orig = os.path.join(target, t[len(".trash_"):])
-            tr = os.path.join(target, t)
-            try:
-                if os.path.exists(orig):
-                    shutil.rmtree(tr, ignore_errors=True)
-                else:
-                    os.replace(tr, orig)
-            except OSError:
-                # lost the race with the writer (it re-installed orig or
-                # removed the trash between our check and the rename) —
-                # the writer's state is the correct one; leave it alone
-                continue
-
     def _replace_partitions_by_move(self, staging: str, target: str) -> None:
         """Dynamic-partition-overwrite via driver-side file moves: for
         each ``day=…`` partition dir in ``staging``, swap the matching
@@ -523,7 +452,7 @@ class RollupPipeline:
         vulnerable window is two renames, not an unbounded rmtree, and a
         crash inside it leaves the old bytes intact under a dot-prefixed
         dir (invisible to Spark's file listing) that
-        ``_heal_interrupted_swaps`` restores on the next run.  A crash
+        ``heal_interrupted_swaps`` restores on the next run.  A crash
         between partitions leaves a subset replaced — healed by the
         replay contract, identical to a crash mid-commit of a
         dynamic-overwrite write job.
@@ -540,7 +469,7 @@ class RollupPipeline:
         until the next run's heal."""
         if not os.path.isdir(staging):
             return
-        self._heal_interrupted_swaps(target)
+        heal_interrupted_swaps(target)
         for sub in os.listdir(staging):
             if "=" not in sub:
                 continue
@@ -619,7 +548,7 @@ class RollupPipeline:
           lists and mutates its own tiers' subtrees.
         - the blob store is the serving surface (``read_series``,
           ``read_blobs``).  A crash inside a swap leaves the old bytes
-          under ``.trash_<sub>``, which ``_heal_interrupted_swaps``
+          under ``.trash_<sub>``, which ``heal_interrupted_swaps``
           restores before the next swap or serving read, so readers
           never see a missing partition between the crash and the
           replay that re-encodes it (for a retention re-encode, the
@@ -629,7 +558,9 @@ class RollupPipeline:
 
         all_blobs = None
         for tier, day_cells in tier_cells.items():
-            cells = self._day_filter("day", sorted(day_cells))(self._read_tier(tier))
+            cells = self._read_tier(tier).filter(
+                F.col("day").isin(sorted(day_cells))
+            )
             hint = sum(day_cells.values())
             branches[tier] = (
                 "driver" if encodes_on_driver(self.spark, hint) else "spark"
@@ -686,7 +617,6 @@ class RollupPipeline:
         batch 1h+1d into one job — their encodes are tiny, so an extra
         job launch costs more than the overlap saves (A/B'd on the sf0.1
         daily delta)."""
-        day_filter = self._day_filter("day", affected_days)
         fine_split = first_run or len(affected_days) > 4
         branches: dict[str, str] = {}
 
@@ -707,9 +637,12 @@ class RollupPipeline:
             pending = [pool.submit(blobs_1m)]
             with stage("tier_fold"):
                 for finer, tier in (("1m", "1h"), ("1h", "1d")):
-                    upd = fold_tier(
-                        day_filter(self._read_tier(finer)).drop("day"), tier
-                    ).withColumn("day", F.to_date("bucket"))
+                    cells = self._read_tier(finer).filter(
+                        F.col("day").isin(affected_days)
+                    )
+                    upd = fold_tier(cells.drop("day"), tier).withColumn(
+                        "day", F.to_date("bucket")
+                    )
                     self._merge_partitions(upd, self.tier_path(tier))
                     if tier == "1h" and fine_split:
                         pending.append(pool.submit(blobs, ["1h"], "1h"))
@@ -876,7 +809,7 @@ class RollupPipeline:
         if not prep.days:
             return n_turns, [], 0, {}
         with stage("tier_1m"):
-            turns = self._day_filter("day", prep.days)(self._read_turns())
+            turns = self._read_turns().filter(F.col("day").isin(prep.days))
             upd = rollup_transcripts(
                 turns.select("conv_id", "role", "tool", "ts", "text_len"),
                 "1m",
@@ -918,9 +851,7 @@ class RollupPipeline:
         return out
 
     # ---- retention ----
-    def enforce_retention(
-        self, policy: dict, now=None, dry_run: bool = False
-    ) -> dict:
+    def enforce_retention(self, policy: dict, now=None) -> dict:
         """Retention enforcement — the third leg of the north rule
         (rollup + downsample + **retention**).  ``policy`` maps tier →
         max age in days (None = keep forever), e.g.
@@ -960,10 +891,7 @@ class RollupPipeline:
             for d, sub in _day_partitions(self.tier_path(tier)):
                 if d < cutoff:
                     gone.append(str(d))
-                    if not dry_run:
-                        shutil.rmtree(
-                            os.path.join(self.tier_path(tier), sub)
-                        )
+                    shutil.rmtree(os.path.join(self.tier_path(tier), sub))
             # blob segments starting before the cutoff: those that still
             # hold surviving tier rows are RE-ENCODED from them, so the
             # blob serving path never trails the tier tables (a month
@@ -972,7 +900,7 @@ class RollupPipeline:
             # segment whose swap a crash interrupted is restored first,
             # so it is listed like the others.
             tier_dir = os.path.join(self.blobs_path, f"tier_part={tier}")
-            self._heal_interrupted_swaps(tier_dir)
+            heal_interrupted_swaps(tier_dir)
             old = [
                 (d, sub)
                 for d, sub in _day_partitions(tier_dir, prefix="seg_day=")
@@ -988,10 +916,9 @@ class RollupPipeline:
             for d, sub in old:
                 if d not in kept:
                     gone.append(f"blob:{d}")
-                    if not dry_run:
-                        shutil.rmtree(os.path.join(tier_dir, sub))
+                    shutil.rmtree(os.path.join(tier_dir, sub))
             deleted[tier] = gone
-            if live and not dry_run:
+            if live:
                 tier_cells[tier] = live
         branches: dict = {}
         if tier_cells:
@@ -1000,7 +927,6 @@ class RollupPipeline:
         metrics.log(
             "retention",
             now=str(now),
-            dry_run=dry_run,
             deleted={k: len(v) for k, v in deleted.items()},
             reencoded={k: len(v) for k, v in reencoded.items()},
             encode_branch=branches,
@@ -1031,7 +957,7 @@ class RollupPipeline:
                 n += sum(1 for f in files if f.endswith(".parquet"))
             return n
 
-        self._heal_interrupted_swaps(self.turns_path)
+        heal_interrupted_swaps(self.turns_path)
         before = _count_files()
         df = self._read_turns()
         if days and not self._legacy_turns_days():
@@ -1039,7 +965,7 @@ class RollupPipeline:
                 d.date() if hasattr(d, "date") else _dt.date.fromisoformat(str(d))
                 for d in days
             ]
-            df = self._day_filter("day", days)(df)
+            df = df.filter(F.col("day").isin(days))
         staging = self._stage_dir("compact")
         shutil.rmtree(staging, ignore_errors=True)
         (
@@ -1069,9 +995,7 @@ class RollupPipeline:
         if os.path.isdir(self.blobs_path):
             for sub in os.listdir(self.blobs_path):
                 if sub.startswith("tier_part="):
-                    self._heal_interrupted_swaps(
-                        os.path.join(self.blobs_path, sub)
-                    )
+                    heal_interrupted_swaps(os.path.join(self.blobs_path, sub))
         df = self.spark.read.schema(BLOB_READ_SCHEMA).parquet(self.blobs_path)
         return df.filter(F.col("tier") == tier) if tier else df
 

@@ -58,42 +58,3 @@ TURNS_READ_SCHEMA = T.StructType(
         T.StructField("day", T.DateType(), True),
     ]
 )
-
-# Gorilla blob table: one row per (conv_id, segment-window, measure)
-# chunk — canonical definition lives in codec/blobs.py (re-exported here).
-from tsforge_spark.codec.blobs import BLOB_SCHEMA  # noqa: E402,F401
-
-# Lineage record — modeled on the reference lineage dicts
-# (``src/tsforge/workflows/lineage.py:27-74``) but per-partition and
-# appendable (SURVEY.md §2.1 sink row).
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("snapshot_id", T.LongType(), True),
-        T.StructField("bucket_id", T.IntegerType(), True),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("byte_count", T.LongType(), True),
-        T.StructField("detail", T.StringType(), True),
-    ]
-)
-
-# Standardized prediction frame — the reference result-table contract
-# (``src/tsforge/workflows/manager.py:111-180``).
-PRED_SCHEMA = T.StructType(
-    [
-        T.StructField("unique_id", T.StringType(), False),
-        T.StructField("date", T.TimestampType(), False),
-        T.StructField("cutoff", T.TimestampType(), True),
-        T.StructField("y", T.DoubleType(), True),
-        T.StructField("yhat", T.DoubleType(), True),
-        T.StructField("lo_80", T.DoubleType(), True),
-        T.StructField("hi_80", T.DoubleType(), True),
-        T.StructField("workflow", T.StringType(), True),
-        T.StructField("engine", T.StringType(), True),
-        T.StructField("model", T.StringType(), True),
-    ]
-)
-
-TIER_FREQS = {"1m": "minute", "1h": "hour", "1d": "day"}
-TIER_ORDER = ["1m", "1h", "1d"]
